@@ -70,7 +70,7 @@ object Gen {
   }
 
   final case class WebEvent(user: String, typ: String, url: String, tsMs: Long,
-      utm: Option[String], late: Boolean) {
+      utm: Option[String]) {
     def json: String =
       s"""{"user_id":"$user","event_type":"$typ","url":"$url",""" +
         s""""timestamp":"${webTime.format(Instant.ofEpochMilli(tsMs))}"""" +
@@ -105,11 +105,11 @@ object Gen {
             r.nextLong(240000L) - 120000L
         WebEvent(s"w${skewedUser(r, users)}", webTypes(r.nextInt(webTypes.length)),
           s"/p/${r.nextInt(400)}", unique(t),
-          if (r.nextInt(5) == 0) None else Some(utm(r.nextInt(utm.length))), late)
+          if (r.nextInt(5) == 0) None else Some(utm(r.nextInt(utm.length))))
       }
     }
     body :+ IndexedSeq(WebEvent(Gen.flushUser, "page_view", "/",
-      unique(start + hours * 3600000L + 3600000L), None, late = false))
+      unique(start + hours * 3600000L + 3600000L), None))
   }
 
   val flushUser = "flush"
