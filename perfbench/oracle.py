@@ -1,39 +1,15 @@
 """query_mix correctness: each Spark result against its SparkEntry.oracleSql
-run in DuckDB, normalised the way the repository's oracle compare does it
-(columns sorted by name, rows sorted, floats rounded to 6 places,
-timestamps as UTC-naive ISO strings). The row lists are then hashed."""
-import datetime
+run in DuckDB, normalised by the repository's own oracle compare
+(tools/check.py: columns sorted by name, rows sorted, floats rounded to 6
+places, timestamps as UTC-naive ISO strings)."""
 import glob
-import hashlib
 import json
-import math
 import os
+import sys
 
-TABLES = ["region", "nation", "customer", "supplier", "part",
-          "orders", "lineitem", "events", "documents", "embeddings"]
-
-
-def norm_cell(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else round(v, 6)
-    if hasattr(v, "isoformat"):
-        if getattr(v, "tzinfo", None) is not None:
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        return v.isoformat()
-    if isinstance(v, list):
-        return tuple(norm_cell(x) for x in v)
-    return v
-
-
-def digest(cols, rows):
-    """Hash of the normalised result: sorted column names, sorted rows."""
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    out.sort(key=lambda t: tuple((x is None, str(x)) for x in t))
-    text = repr(([cols[i] for i in order], out))
-    return hashlib.sha256(text.encode()).hexdigest()
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))), "tools"))
+from check import TABLES, norm_rows  # noqa: E402
 
 
 def connect(data_dir):
@@ -47,7 +23,7 @@ def connect(data_dir):
 
 
 def compare(con, spark_files, sql):
-    """None when the Spark output hash-matches the oracle, else why not."""
+    """None when the Spark output matches the oracle, else why not."""
     if not spark_files:
         return "no Spark output"
     sq = f"SELECT * FROM read_parquet({sorted(spark_files)!r})"
@@ -61,8 +37,8 @@ def compare(con, spark_files, sql):
         return f"columns {sorted(scols)} vs oracle {sorted(ocols)}"
     if len(srows) != len(orows):
         return f"{len(srows)} rows vs oracle {len(orows)}"
-    if digest(scols, srows) != digest(ocols, orows):
-        return "value hash differs from the oracle"
+    if norm_rows(scols, srows) != norm_rows(ocols, orows):
+        return "values differ from the oracle"
     return None
 
 

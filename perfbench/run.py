@@ -23,6 +23,7 @@ import shutil
 import signal
 import subprocess
 import sys
+import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
@@ -33,7 +34,8 @@ WORKLOADS = ["stream_ingest", "daily_gold", "query_mix"]
 BUILD = os.path.join(ROOT, ".bench_build")
 CLASSES = os.path.join(BUILD, "perfbench-target", "scala-2.13", "classes")
 DATA = os.path.join(HERE, "data", "sf0.01")
-JVM_TIMEOUT_S = 170
+# every JVM of one invocation ends within this many seconds after the build
+RUN_BUDGET_S = 170
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
              "java.base/java.lang.reflect", "java.base/java.io",
              "java.base/java.net", "java.base/java.nio",
@@ -68,8 +70,7 @@ def sources():
 
 
 def build():
-    """Compiles engine and benchmark unless the build matches the sources;
-    returns the sources' hash."""
+    """Compiles engine and benchmark unless the build matches the sources."""
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         fail("engine sources not found under src/main/scala/graft")
     h = hashlib.sha256()
@@ -81,22 +82,23 @@ def build():
     if os.path.isdir(CLASSES) and os.path.exists(stamp):
         with open(stamp) as fh:
             if fh.read() == h.hexdigest():
-                return h.hexdigest()
+                return
     os.makedirs(BUILD, exist_ok=True)
     log = os.path.join(BUILD, "build.log")
     with open(log, "w") as out:
         rc = subprocess.call(["sbt", "-batch", "-Dsbt.log.noformat=true",
                               "compile"], cwd=HERE, stdout=out,
-                             stderr=subprocess.STDOUT)
+                             stderr=subprocess.STDOUT,
+                             env=dict(os.environ, SPARK_HOME=spark_home()))
     if rc != 0:
         fail("build failed, see " + log)
     with open(stamp, "w") as fh:
         fh.write(h.hexdigest())
-    return h.hexdigest()
 
 
-def run_jvm(workload, seed, seconds, trace, cores, mem):
-    """One fresh JVM; returns its result record."""
+def run_jvm(workload, seed, seconds, trace, cores, mem, deadline):
+    """One fresh JVM, killed at `deadline` (time.monotonic()); returns its
+    result record."""
     work = os.path.join(BUILD, "runs", "%s-%d-%d" % (workload, seed, os.getpid()))
     shutil.rmtree(work, ignore_errors=True)
     for d in ("tmp", "local", "derby"):
@@ -117,7 +119,7 @@ def run_jvm(workload, seed, seconds, trace, cores, mem):
                                 stderr=subprocess.STDOUT,
                                 start_new_session=True)
         try:
-            proc.wait(timeout=JVM_TIMEOUT_S)
+            proc.wait(timeout=max(1.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
             os.killpg(proc.pid, signal.SIGKILL)
             proc.wait()
@@ -129,6 +131,10 @@ def run_jvm(workload, seed, seconds, trace, cores, mem):
         fail("JVM exited with %s and no result:\n%s" % (proc.returncode, tail))
     with open(result_path) as fh:
         result = json.load(fh)
+    valid = result["out"].get("open_loop_valid", True)
+    result["checks"].append({"name": "generator kept its schedule",
+                             "ok": valid,
+                             "detail": "" if valid else "generator ran late"})
     if workload == "query_mix":
         import oracle
         for name, problem in oracle.check_results(
@@ -150,28 +156,20 @@ def main():
                     default=min(4, len(os.sched_getaffinity(0))))
     ap.add_argument("--mem", default="1536m")
     a = ap.parse_args()
-    stamp = build()
-
-    # tracing overhead is measured against an untraced run of the same
-    # workload and build: the newest one, or a fresh one
-    last = os.path.join(BUILD, "last-untraced-%s.json" % a.workload)
-    base = {}
-    if os.path.exists(last):
-        with open(last) as fh:
-            base = json.load(fh)
-    if a.trace and base.get("stamp") != stamp:
-        untraced = run_jvm(a.workload, a.seed, a.seconds, 0, a.cores, a.mem)
-        base = dict(summary.end_to_end(untraced), stamp=stamp)
-    r = run_jvm(a.workload, a.seed, a.seconds, a.trace, a.cores, a.mem)
+    build()
+    deadline = time.monotonic() + RUN_BUDGET_S
+    # tracing overhead: an untraced twin with the same arguments runs first
+    twin = run_jvm(a.workload, a.seed, a.seconds, 0, a.cores, a.mem,
+                   deadline) if a.trace else None
+    r = run_jvm(a.workload, a.seed, a.seconds, a.trace, a.cores, a.mem,
+                deadline)
     e2e = summary.end_to_end(r)
-    if not a.trace:
-        base = dict(e2e, stamp=stamp)
-    with open(last, "w") as fh:
-        json.dump(base, fh)
+    if twin:
+        r["checks"] += [dict(c, name="untraced twin: " + c["name"])
+                        for c in twin["checks"]]
+        r["attempted"] += twin["attempted"]
+        r["failed"] += twin["failed"]
 
-    valid = r["out"].get("open_loop_valid", True)
-    r["checks"].append({"name": "generator kept its schedule", "ok": valid,
-                        "detail": "" if valid else "generator ran late"})
     failed_checks = [c for c in r["checks"] if not c["ok"]]
     for c in failed_checks:
         print("check failed: %s: %s" % (c["name"], c["detail"]), file=sys.stderr)
@@ -179,7 +177,7 @@ def main():
     if a.trace:
         metrics = {k: {"value": v, "unit": u} for k, u, v in summary.per_layer(r)}
         metrics["trace.overhead_share"]["value"] = \
-            e2e["op_p50_ms"] / base["op_p50_ms"] - 1
+            e2e["op_p50_ms"] / summary.end_to_end(twin)["op_p50_ms"] - 1
     else:
         metrics = {k: {"value": e2e[k], "unit": u} for k, u in summary.END_TO_END}
     print(json.dumps({"workload": a.workload, "named": named,

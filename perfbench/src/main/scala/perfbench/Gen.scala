@@ -114,6 +114,14 @@ object Gen {
 
   val flushUser = "flush"
 
+  /** Gaps between `n` open-loop arrivals, in ms: exponential with the given
+    * mean (a Poisson process), at least 1 ms.
+    */
+  def arrivalGapsMs(seed: Long, n: Int, meanMs: Long): IndexedSeq[Long] = {
+    val r = rng(seed, 3, 0)
+    IndexedSeq.fill(n)(math.max(1L, math.round(-meanMs * math.log(1 - r.nextDouble()))))
+  }
+
   /** Atomic publish for a file-source directory: write a dot-file (which the
     * file source ignores) and rename it into place.
     */

@@ -29,6 +29,10 @@ object SelfTest {
       Gen.webReplay(seed, 6, 50, 1, 20, 0.1).flatten.map(_.json).mkString("\n")
     expect("same seed gives a byte-identical replay", replayText(11) == replayText(11))
     expect("another seed gives another replay", replayText(11) != replayText(12))
+    expect("same seed gives the same arrival schedule",
+      Gen.arrivalGapsMs(11, 50, 150) == Gen.arrivalGapsMs(11, 50, 150))
+    expect("another seed gives another arrival schedule",
+      Gen.arrivalGapsMs(11, 50, 150) != Gen.arrivalGapsMs(12, 50, 150))
 
     val spark = graft.core.GraftSession.local(2)
     spark.sparkContext.setLogLevel("ERROR")

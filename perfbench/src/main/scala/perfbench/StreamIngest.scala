@@ -1,6 +1,6 @@
 package perfbench
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, StandardCopyOption}
 import java.time.Instant
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,21 +16,23 @@ import graft.streaming.Sessionize
   * stateful query, through a file source with `maxFilesPerTrigger` as the
   * admission control.
   *
-  *  (a) one cold micro-batch over a warm-up file, then a backlog published
-  *      at once and drained: text files → EventIngest.pipeline →
-  *      Lake.startStreamingSink;
-  *  (b) the same stream, fed by one generator thread at a fixed rate below
-  *      capacity; each file's latency runs from when it was due to the end
-  *      of the micro-batch that committed it;
-  *  (c) replay web events through Sessionize.tumbling (10-minute
+  *  (a) one cold micro-batch over a warm-up file: text files →
+  *      EventIngest.pipeline → Lake.startStreamingSink;
+  *  (b) the same stream, fed by one generator thread with seeded Poisson
+  *      arrivals at a mean rate below capacity; each file's latency runs
+  *      from when it was due to the end of the micro-batch that committed
+  *      it, sampled over the last two thirds of the phase;
+  *  (c) three backlogs, each published at once and drained;
+  *  (d) replay web events through Sessionize.tumbling (10-minute
   *      watermark) → foreachBatch Jdbc.appendBatch into embedded Derby.
   */
 object StreamIngest {
-  val backlogFiles = 48
+  val drains = 3
+  val backlogFiles = 32
   val rowsPerFile = 250
   val filesPerTrigger = 8
-  val pacedRows = 50
-  val pacedIntervalMs = 150L
+  val pacedRows = 80
+  val pacedIntervalMs = 250L
   val replayFiles = 4
   val replayPerFile = 500
   val users = 400
@@ -48,20 +50,25 @@ object StreamIngest {
     val setups = (0 until 3).map { k =>
       val t0 = System.nanoTime()
       ctx.tracer.span("generate", "datagen") {
-        backlog = (0 until backlogFiles).map(i =>
+        backlog = (0 until drains * backlogFiles).map(i =>
           Gen.ecommerceFile(ctx.seed, 1, i, rowsPerFile, 0, users))
-        Gen.publish(ctx.dir(s"ecom_$k"), "warmup.json",
+        Gen.publish(ctx.dir(s"ecom_$k/warmup"), "warmup.json",
           Gen.ecommerceFile(ctx.seed, 0, 0, rowsPerFile, 0, users))
         writeReplay(ctx, ctx.dir(s"web_$k"))
       }
       Ctx.secondsSince(t0)
     }
     ctx.out("setup_data_s") = setups
+    // the stream reads every subdirectory of ecomDir: the warm-up file's,
+    // one per backlog (renamed into place whole, so a trigger sees all of a
+    // backlog or none of it) and the paced files'
     val ecomDir = ctx.work.resolve("ecom_2")
+    val ecomGlob = ecomDir.toString + "/*"
+    val pacedDir = ctx.dir("ecom_2/paced")
     val webDir = ctx.work.resolve("web_2")
     val replay = Gen.webReplay(ctx.seed, replayFiles, replayPerFile, 3, users / 2, 0.04)
     val replayed = replay.init.map(_.size).sum
-    val records = ((1 + backlogFiles) * rowsPerFile + pacedFiles * pacedRows).toLong
+    val records = ((1 + drains * backlogFiles) * rowsPerFile + pacedFiles * pacedRows).toLong
 
     val lake = ctx.dir("lake").toString
     val lakeCkpt = ctx.work.resolve("ckpt_lake")
@@ -70,50 +77,62 @@ object StreamIngest {
     val props = Ctx.derbyProps()
 
     ctx.startTimed()
-    // (a) the cold first micro-batch, then the backlog drain
+    // (a) the cold first micro-batch
     val src = spark.readStream.option("maxFilesPerTrigger", filesPerTrigger.toLong)
-      .text(ecomDir.toString).select(col("value").cast("binary").as("value"))
+      .text(ecomGlob).select(col("value").cast("binary").as("value"))
     val t0Ms = System.currentTimeMillis()
     val q = ctx.tracer.span("stream.start", "lake") {
       Lake.startStreamingSink(EventIngest.pipeline(src), lake, lakeCkpt.toString)
     }
     ctx.tracer.span("cold", "streaming")(q.processAllAvailable())
     ctx.out("first_batch_ms") = batchEnds(q.recentProgress).values.max - t0Ms
-    val tDrainMs = System.currentTimeMillis()
-    backlog.zipWithIndex.foreach { case (text, i) =>
-      Gen.publish(ecomDir, f"backlog_$i%05d.json", text)
-    }
-    ctx.tracer.span("drain", "streaming")(q.processAllAvailable())
-    val drainEndMs = batchEnds(q.recentProgress).values.max
-    ctx.out("ingest_rps") = backlogFiles * rowsPerFile / ((drainEndMs - tDrainMs) / 1000.0)
-    ctx.attempted += 1 + backlogFiles
 
-    // (b) paced open loop from one generator thread
+    // (b) paced open loop from one generator thread; Poisson arrivals keep
+    // the files out of step with the micro-batches
+    val offsets = Gen.arrivalGapsMs(ctx.seed, pacedFiles, pacedIntervalMs).scanLeft(0L)(_ + _).tail
     val due = new Array[Long](pacedFiles)
     val wrote = new Array[Long](pacedFiles)
     val gen = new Thread(() => {
       val start = System.currentTimeMillis()
       for (i <- 0 until pacedFiles) {
-        due(i) = start + (i + 1) * pacedIntervalMs
+        due(i) = start + offsets(i)
         val text = Gen.ecommerceFile(ctx.seed, 2, i, pacedRows, 1, users)
         val wait = due(i) - System.currentTimeMillis()
         if (wait > 0) Thread.sleep(wait)
-        Gen.publish(ecomDir, f"paced_$i%05d.json", text)
+        Gen.publish(pacedDir, f"paced_$i%05d.json", text)
         wrote(i) = System.currentTimeMillis()
       }
     }, "perfbench-generator")
     gen.start()
     gen.join()
     ctx.tracer.span("paced", "streaming")(q.processAllAvailable())
+    ctx.attempted += 1 + pacedFiles
+
+    // (c) the backlog drains, on a stream the paced phase has warmed
+    ctx.out("drain_rps") = (0 until drains).map { d =>
+      val tDrainMs = System.currentTimeMillis()
+      val stage = ctx.dir(s"stage_$d")
+      (d * backlogFiles until (d + 1) * backlogFiles).foreach { i =>
+        Gen.publish(stage, f"backlog_$i%05d.json", backlog(i))
+      }
+      Files.move(stage, ecomDir.resolve(s"backlog_$d"), StandardCopyOption.ATOMIC_MOVE)
+      ctx.tracer.span("drain", "streaming")(q.processAllAvailable())
+      val drainEndMs = batchEnds(q.recentProgress).values.max
+      backlogFiles * rowsPerFile / ((drainEndMs - tDrainMs) / 1000.0)
+    }
+    ctx.attempted += drains * backlogFiles
     val ingestProgress = q.recentProgress
     q.stop()
-    ctx.attempted += pacedFiles
+
     val ends = batchEnds(ingestProgress)
     val batchOf = fileBatches(lakeCkpt)
-    val lat = (0 until pacedFiles).flatMap { i =>
+    ctx.failed += 1 + pacedFiles + drains * backlogFiles - batchOf.size
+    // the first third of the paced phase warms the micro-batch path; its
+    // files are checked but not sampled
+    val sampledFrom = offsets.last / 3
+    val lat = (0 until pacedFiles).filter(offsets(_) >= sampledFrom).flatMap { i =>
       batchOf.get(f"paced_$i%05d.json").flatMap(ends.get).map(_ - due(i))
     }
-    ctx.failed += 1 + backlogFiles + pacedFiles - batchOf.size
     ctx.out("lake_latency_ms") = lat.map(_.toDouble)
     val lateMs = (0 until pacedFiles).map(i => wrote(i) - due(i))
     ctx.out("gen_late_ms_max") = lateMs.max
@@ -125,7 +144,7 @@ object StreamIngest {
       commits.count { case (i, c) => due(i) < e && c >= e }
     }.max
 
-    // (c) replay through the stateful sessionizer into Derby
+    // (d) replay through the stateful sessionizer into Derby
     val appendBatch: (DataFrame, Long) => Unit = (df, _) =>
       ctx.tracer.span("serve.append", "serve") {
         Jdbc.appendBatch(df, url, "web_sessions", props, numPartitions = ctx.cores)
@@ -153,10 +172,10 @@ object StreamIngest {
     streamLayers(ctx, ingestLayer, sessLayer)
     ctx.out("stream_batch_ms") = ingestProgress.toSeq
       .filter(_.numInputRows > 0).map(p => duration(p, "triggerExecution").toDouble)
-    if (ctx.traced) layerCalls(ctx, ecomDir, lake)
+    if (ctx.traced) layerCalls(ctx, ecomGlob, lake)
 
     // correctness, outside the timed region
-    val files = Files.list(ecomDir).iterator().asScala
+    val files = Files.walk(ecomDir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".json")).map(_.toString).toSeq
     val direct = EventIngest.pipeline(spark.read.text(files: _*)
       .select(col("value").cast("binary").as("value"))).drop("extracted_date")
@@ -227,9 +246,9 @@ object StreamIngest {
   /** The module calls on their own, outside the timed region: decode alone
     * into noop, then decode plus a batch lake write.
     */
-  def layerCalls(ctx: Ctx, ecomDir: Path, lake: String): Unit = {
+  def layerCalls(ctx: Ctx, ecomGlob: String, lake: String): Unit = {
     val spark = ctx.spark
-    def decoded = EventIngest.pipeline(spark.read.text(ecomDir.toString)
+    def decoded = EventIngest.pipeline(spark.read.text(ecomGlob)
       .select(col("value").cast("binary").as("value")))
     val decode = (0 until 3).map { _ =>
       val t0 = System.nanoTime()

@@ -3,7 +3,7 @@
 end-to-end metric, the median and the spread (inter-quartile range over the
 median, from statistics.quantiles(values, n=4)).
 
-    python3 perfbench/steady.py --workload daily_gold --runs 10 [--seconds 10]
+    python3 perfbench/steady.py --workload query_mix --runs 10 [--seconds 12]
 """
 import argparse
 import json
@@ -22,13 +22,15 @@ def main():
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--first-seed", type=int, default=1)
+    ap.add_argument("--cores", type=int)
     a = ap.parse_args()
     values = {}
     for seed in range(a.first_seed, a.first_seed + a.runs):
         out = subprocess.run(
             [sys.executable, os.path.join(HERE, "run.py"), "--workload",
              a.workload, "--seed", str(seed), "--seconds", str(a.seconds),
-             "--trace", "0"], cwd=os.path.dirname(HERE),
+             "--trace", "0"] + (["--cores", str(a.cores)] if a.cores else []),
+            cwd=os.path.dirname(HERE),
             stdout=subprocess.PIPE, text=True, check=True).stdout
         last = json.loads(out.strip().splitlines()[-1])
         if not last["correct"] or last["failed"]:

@@ -1,57 +1,39 @@
 """Turns one run's raw record (result.json, written by perfbench.Main) into
 the benchmark's metrics. Pure functions only, so tests can drive them."""
+import json
+import os
 import statistics
+
+# The metric names and units are BENCHMARK.json's, at the repository root.
+with open(os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "BENCHMARK.json")) as _fh:
+    _SPEC = json.load(_fh)
 
 LAYERS = ["datagen", "ingest", "lake", "streaming", "analytics", "serve",
           "operators", "plans", "core"]
 
 # Every end-to-end metric, per workload: (name, unit).
-END_TO_END = [("setup_s", "s"), ("op_p50_ms", "ms"), ("throughput_rps", "1/s"),
-              ("cold_ms", "ms")]
+END_TO_END = [(m["name"], m["unit"]) for m in _SPEC["end_to_end"]]
+
+# Every per-layer metric: (name, unit); 0 where a workload does not reach
+# the layer.
+PER_LAYER = [(m["name"], m["unit"]) for m in _SPEC["per_layer"]]
 
 # Units of the figures on the named line, under the names the workloads'
 # users know them by.
 NAMED_UNITS = {"setup_s": "s", "peak_rss_mb": "MB", "failed_share": "share",
-               "ingest_rps": "1/s", "lake_latency_p50_ms": "ms",
+               "ingest_rps": "1/s", "first_batch_ms": "ms",
+               "lake_latency_p50_ms": "ms",
                "lake_latency_tail_ms": "ms", "sessionize_rps": "1/s",
                "batch_p50_ms": "ms", "gold_job_p50_s": "s",
-               "gold_rows_per_s": "1/s", "mix_pass_s": "s",
+               "gold_rows_per_s": "1/s", "gold_cold_job_s": "s",
+               "mix_pass_s": "s",
                "mix_cold_pass_s": "s", "query_tail_s": "s"}
-
-# The query_mix slice, as listed in QueryMix.scala.
-MIX_QUERIES = ["q01_pricing_summary", "q11_session_level", "q12_user_level",
-               "q22_dedup_exact", "q25_minhash_dedup", "q50_dedup_components",
-               "q29_ann_bruteforce", "q285_media_features",
-               "q65_range_join_rewrite", "q261_hamming_join_rewrite"]
 
 # Layer metrics of daily_gold alone, which runs outside the gated set.
 PER_LAYER_GOLD = [("lake.read_s", "s"), ("gold.session_level_s", "s"),
                   ("gold.user_level_s", "s"), ("serve.overwrite_s", "s"),
                   ("serve.rows_written", "count")]
-
-PER_LAYER_FIXED = [
-    ("ingest.decode_s", "s"), ("lake.write_s", "s"),
-    ("lake.files_written", "count"), ("lake.bytes_written", "bytes"),
-    ("lake.rows_scanned", "count"),
-    ("stream.batches", "count"), ("stream.latest_offset_ms", "ms"),
-    ("stream.query_planning_ms", "ms"), ("stream.add_batch_ms", "ms"),
-    ("stream.wal_commit_ms", "ms"), ("stream.commit_offsets_ms", "ms"),
-    ("stream.backlog_files_max", "count"),
-    ("state.rows_total", "count"), ("state.memory_bytes", "bytes"),
-    ("state.rows_dropped_late", "count"), ("state.update_ms", "ms"),
-    ("state.commit_ms", "ms"),
-    ("serve.append_s", "s"),
-    ("memo.persisted_rdds", "count"), ("memo.cached_bytes", "bytes"),
-    ("plan.exchanges", "count"), ("plan.scans", "count"),
-    ("plan.planning_ms", "ms"),
-    ("exec.jobs", "count"), ("exec.stages", "count"), ("exec.tasks", "count"),
-    ("exec.busy_share", "share"), ("exec.gc_ms", "ms"),
-    ("exec.shuffle_read_bytes", "bytes"), ("exec.shuffle_write_bytes", "bytes"),
-    ("exec.spill_bytes", "bytes"),
-    ("gen.late_ms_max", "ms"), ("gen.records", "count"),
-    ("trace.overhead_share", "share")] + \
-    [("self.%s_s" % layer, "s") for layer in LAYERS] + \
-    [("query.%s_s" % q, "s") for q in MIX_QUERIES]
 
 
 def tail(values):
@@ -88,18 +70,17 @@ def self_by_layer(spans):
 
 
 def _op_samples(r):
-    """(warm per-op latencies in ms, throughput in 1/s, cold op in ms).
-    An op is a paced file on stream_ingest, a daily job on daily_gold and a
-    pass of the mix on query_mix."""
+    """(warm per-op latencies in ms, throughput in 1/s). An op is a paced
+    file on stream_ingest, a daily job on daily_gold and a pass of the mix
+    on query_mix."""
     o = r["out"]
     w = r["workload"]
     if w == "stream_ingest":
-        return o["lake_latency_ms"], o["ingest_rps"], o["first_batch_ms"]
+        return o["lake_latency_ms"], median(o["drain_rps"])
     if w == "daily_gold":
-        return o["gold_job_ms"], o["gold_rows_per_s"], o["gold_cold_ms"]
+        return o["gold_job_ms"], o["gold_rows_per_s"]
     queries = sum(len(xs) for xs in o["query_s"].values())
-    return ([x * 1000 for x in o["mix_pass_s"]], queries / sum(o["mix_pass_s"]),
-            o["mix_cold_pass_s"] * 1000)
+    return [x * 1000 for x in o["mix_pass_s"]], queries / sum(o["mix_pass_s"])
 
 
 def setup_s(r):
@@ -107,13 +88,9 @@ def setup_s(r):
 
 
 def end_to_end(r):
-    ops, rate, cold = _op_samples(r)
-    return {
-        "setup_s": setup_s(r),
-        "op_p50_ms": median(ops),
-        "throughput_rps": rate,
-        "cold_ms": cold,
-    }
+    ops, rate = _op_samples(r)
+    return {"setup_s": setup_s(r), "op_p50_ms": median(ops),
+            "throughput_rps": rate}
 
 
 def named(r):
@@ -127,12 +104,15 @@ def named(r):
     if w == "stream_ingest":
         lat = o["lake_latency_ms"]
         tails["lake_latency_tail_ms"] = tail(lat)
-        out.update(ingest_rps=o["ingest_rps"], lake_latency_p50_ms=median(lat),
+        out.update(ingest_rps=median(o["drain_rps"]),
+                   first_batch_ms=o["first_batch_ms"],
+                   lake_latency_p50_ms=median(lat),
                    sessionize_rps=o["sessionize_rps"],
                    batch_p50_ms=median(o["stream_batch_ms"]))
     elif w == "daily_gold":
         out.update(gold_job_p50_s=median(o["gold_job_ms"]) / 1000,
-                   gold_rows_per_s=o["gold_rows_per_s"])
+                   gold_rows_per_s=o["gold_rows_per_s"],
+                   gold_cold_job_s=o["gold_cold_ms"] / 1000)
     else:
         tails["query_tail_s"] = tail(
             [x for xs in o["query_s"].values() for x in xs])
@@ -151,7 +131,9 @@ def per_layer(r):
     lay = dict(r["layers"])
     o = r["out"]
     spans = r["spans"]
-    names = PER_LAYER_FIXED + (PER_LAYER_GOLD if r["workload"] == "daily_gold" else [])
+    names = PER_LAYER + (PER_LAYER_GOLD if r["workload"] == "daily_gold" else [])
+    names += [("query.%s_s" % q, "s") for q in o.get("query_s", {})
+              if ("query.%s_s" % q, "s") not in names]
     out = {name: float(lay.get(name, 0.0)) for name, _ in names}
     nq = lay.get("plan.queries", 0)
     if nq:
