@@ -22,15 +22,13 @@ def main():
     ap.add_argument("--runs", type=int, default=10)
     ap.add_argument("--seconds", type=int, default=12)
     ap.add_argument("--first-seed", type=int, default=1)
-    ap.add_argument("--cores", type=int)
     a = ap.parse_args()
     values = {}
     for seed in range(a.first_seed, a.first_seed + a.runs):
         out = subprocess.run(
             [sys.executable, os.path.join(HERE, "run.py"), "--workload",
              a.workload, "--seed", str(seed), "--seconds", str(a.seconds),
-             "--trace", "0"] + (["--cores", str(a.cores)] if a.cores else []),
-            cwd=os.path.dirname(HERE),
+             "--trace", "0"], cwd=os.path.dirname(HERE),
             stdout=subprocess.PIPE, text=True, check=True).stdout
         last = json.loads(out.strip().splitlines()[-1])
         if not last["correct"] or last["failed"]:
