@@ -35,6 +35,36 @@ object GraftSession {
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
     .config("spark.ui.enabled", "false")
 
+  /** Children of [[derived]], per parent session (weak, identity-keyed:
+    * SparkSession does not override equals) and per override map. A child
+    * holds the parent's SparkContext and shared state, never the parent
+    * object itself, so a dropped parent releases its whole entry.
+    */
+  private val derivedSessions =
+    new java.util.WeakHashMap[SparkSession, java.util.Map[Map[String, String], SparkSession]]()
+
+  /** The child session of `spark` with `overrides` set on its runtime conf,
+    * built once per (parent, override map) and never changed afterwards.
+    *
+    * Query code that needs different confs (a rule flag read at
+    * optimization time, a broadcast threshold) gets them here rather than
+    * by `spark.newSession()` per call: Spark caches generated code per
+    * session class loader and every new session gets its own, so each
+    * call would recompile all of its whole-stage generated code. The
+    * parent's runtime conf is never touched; the child starts from the
+    * same builder confs, extensions and SparkContext, like any
+    * `newSession()`.
+    */
+  def derived(spark: SparkSession, overrides: Map[String, String]): SparkSession =
+    derivedSessions.synchronized {
+      derivedSessions.computeIfAbsent(spark, _ => new java.util.HashMap())
+        .computeIfAbsent(overrides, _ => {
+          val s = spark.newSession()
+          overrides.foreach { case (k, v) => s.conf.set(k, v) }
+          s
+        })
+    }
+
   /** Local session used by tests and ad-hoc mains. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 import graft.functions.{Hashing, Text}
 
 /** Document deduplication at corpus scale — exact, MinHash-LSH, SimHash,
@@ -272,8 +272,10 @@ object Dedup {
     * dropped), demonstrating the planner-rule form of the similarity join:
     * the query says WHAT (a Jaccard threshold), the rule picks the
     * scale-safe HOW. The rule reads its conf at optimization time, so the
-    * entry pins it on a fresh session (inherits extensions, isolated
-    * runtime conf) exactly like the range-join entry.
+    * entry runs on a derived session, built once per override set
+    * ([[GraftSession.derived]]: extensions inherited, runtime conf
+    * isolated), exactly like the range-join entry; a new session per call
+    * would recompile all its generated code.
     *
     * Scope note: the rule itself PREFIX-FILTERS (AllPairs lemma over the
     * sorted-distinct arrays — see the rule's scaladoc), so its candidate
@@ -300,16 +302,22 @@ object Dedup {
     * this module already makes.
     */
   def jaccardPairsRewrite(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.8, maxDocId: Option[Long] = None): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.graft.similarityJoinRewrite", "true")
+      threshold: Double = 0.8, maxDocId: Option[Long] = None): DataFrame =
+    jaccardPairsRewriteOn(GraftSession.derived(spark, SimilarityJoinRewriteConfs),
+      sfDir, threshold, maxDocId)
+
+  /** The confs [[jaccardPairsRewrite]] runs under, set on its derived
+    * session before any DataFrame of it is built.
+    */
+  private[graft] val SimilarityJoinRewriteConfs = Map(
+    "spark.graft.similarityJoinRewrite" -> "true",
     // modern size-of-null semantics — the rule (correctly) refuses to
     // rewrite under legacy size(NULL) = -1, where a null array would score
     // 1.0 against everything. Shingle arrays are never null at runtime but
     // their static nullability is conservative, so the conf is what makes
-    // the rewrite provably sound here. Must be set BEFORE the DataFrame is
-    // built: analysis bakes the flag into the Size nodes.
-    s.conf.set("spark.sql.legacy.sizeOfNull", "false")
+    // the rewrite provably sound here. It must hold BEFORE the DataFrame
+    // is built: analysis bakes the flag into the Size nodes.
+    "spark.sql.legacy.sizeOfNull" -> "false",
     // InferFiltersFromGenerate + predicate pushdown is PATHOLOGICAL here:
     // Catalyst infers `size(pfx) > 0 AND isnotnull(pfx)` from the rule's
     // prefix explode, and pushdown substitutes the prefix alias through
@@ -319,8 +327,12 @@ object Dedup {
     // with the rule excluded). The inferred filter is pure overhead for
     // this plan anyway — every document explodes a non-empty prefix, and
     // the Generate itself drops empty arrays.
-    s.conf.set("spark.sql.optimizer.excludedRules",
+    "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+
+  /** [[jaccardPairsRewrite]]'s query on a session carrying [[SimilarityJoinRewriteConfs]]. */
+  private[graft] def jaccardPairsRewriteOn(s: SparkSession, sfDir: String,
+      threshold: Double, maxDocId: Option[Long]): DataFrame = {
     // Spread the doc table across the cluster BEFORE the shingle
     // pipeline: documents.parquet is a handful of parquet splits (one, at
     // the gate scales), so without this the per-row shingle+hash
@@ -363,14 +375,23 @@ object Dedup {
     * popcount re-check). Same rows as the hand-written [[simhashPairs]],
     * demonstrating the planner-rule form of the hamming join: the query
     * says WHAT (a distance threshold), the rule picks the scale-safe HOW.
-    * The rule reads its conf at optimization time, so the entry pins it
-    * on a fresh session (inherits extensions, isolated runtime conf),
-    * exactly like the range-join and similarity-join entries.
+    * The rule reads its conf at optimization time, so the entry runs on a
+    * derived session, built once per override set
+    * ([[GraftSession.derived]]: extensions inherited, runtime conf
+    * isolated), exactly like the range-join and similarity-join entries;
+    * a new session per call would recompile all its generated code.
     */
   def simhashPairsPlanned(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 3): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.graft.hammingJoinRewrite", "true")
+      maxHamming: Int = 3): DataFrame =
+    simhashPairsPlannedOn(GraftSession.derived(spark, HammingJoinRewriteConfs),
+      sfDir, maxHamming)
+
+  /** The confs [[simhashPairsPlanned]] runs under. */
+  private[graft] val HammingJoinRewriteConfs = Map("spark.graft.hammingJoinRewrite" -> "true")
+
+  /** [[simhashPairsPlanned]]'s query on a session carrying [[HammingJoinRewriteConfs]]. */
+  private[graft] def simhashPairsPlannedOn(s: SparkSession, sfDir: String,
+      maxHamming: Int): DataFrame = {
     // ship the sketch as a 31-bit INT: INT so the rule chunks the real
     // sketch width (on a zero-stuffed LONG the always-zero high chunks
     // would agree for every pair — correct, but all-pairs), and MASKED

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 
 /** Manual skew mitigation for equality joins — the fallback when AQE's
   * runtime skew-join split isn't available (e.g. the skew is known ahead of
@@ -70,17 +70,25 @@ object Skew {
   /** The q80 fixture: every event enriched with its event-type's global
     * stats — a 5-distinct-value join key, the canonical low-cardinality
     * skew shape. The dim side (5 rows) would of course broadcast in
-    * production; the entry disables auto-broadcast on its own session to
-    * force the shuffle path and exercise the salted plan the way it runs
-    * when the dim side is join-table-sized. Oracle: the plain unsalted
-    * join (salting is a pure partitioning change — bit-identical output,
-    * which is also why the deterministic [[saltedJoinBy]] variant is the
-    * one under the hash gate).
+    * production; the entry disables auto-broadcast on a derived session,
+    * built once per override set ([[GraftSession.derived]]; a new session
+    * per call would recompile all its generated code), to force the
+    * shuffle path and exercise the salted plan the way it runs when the
+    * dim side is join-table-sized. Oracle: the plain unsalted join
+    * (salting is a pure partitioning change — bit-identical output, which
+    * is also why the deterministic [[saltedJoinBy]] variant is the one
+    * under the hash gate).
     */
   def eventTypeStatsSalted(spark: SparkSession, sfDir: String,
-      salts: Int = 16): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      salts: Int = 16): DataFrame =
+    eventTypeStatsSaltedOn(GraftSession.derived(spark, SaltedJoinConfs), sfDir, salts)
+
+  /** The confs [[eventTypeStatsSalted]] runs under. */
+  private[graft] val SaltedJoinConfs = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  /** [[eventTypeStatsSalted]]'s query on a session carrying [[SaltedJoinConfs]]. */
+  private[graft] def eventTypeStatsSaltedOn(s: SparkSession, sfDir: String,
+      salts: Int): DataFrame = {
     val events = Tables.events(s, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
     val stats = events.groupBy(col("event_type"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{GraftSession, Tables}
 
 /** Temporal join operators Spark lacks as built-ins, expressed with
   * shuffle-friendly plans instead of theta joins:
@@ -112,16 +112,23 @@ object TemporalJoins {
     * picks the scalable plan (without it, Catalyst's only option is an
     * O(n·m) BroadcastNestedLoopJoin).
     *
-    * Runs on an isolated `newSession` (same SparkContext, extensions and
-    * builder confs; fresh runtime conf) so enabling the rule here cannot
-    * leak into other queries executing later in the caller's session —
-    * the rule reads its conf at optimization time, which for a write
-    * happens at the write, not when this DataFrame is built.
+    * Runs on a derived session, built once per override set
+    * ([[GraftSession.derived]]), so enabling the rule here cannot leak
+    * into other queries of the caller's session — the rule reads its conf
+    * at optimization time, which for a write happens at the write, not
+    * when this DataFrame is built. One session per override set, not one
+    * per call, because a new session recompiles all its generated code.
     */
-  def shipmentsNearOrderRewritten(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = spark.newSession()
-    s.conf.set("spark.graft.rangeJoinRewrite", "true")
-    s.conf.set("spark.graft.rangeJoin.bucketSeconds", "86400")
+  def shipmentsNearOrderRewritten(spark: SparkSession, sfDir: String): DataFrame =
+    shipmentsNearOrderRewrittenOn(GraftSession.derived(spark, RangeJoinRewriteConfs), sfDir)
+
+  /** The confs [[shipmentsNearOrderRewritten]] runs under. */
+  private[graft] val RangeJoinRewriteConfs = Map(
+    "spark.graft.rangeJoinRewrite" -> "true",
+    "spark.graft.rangeJoin.bucketSeconds" -> "86400")
+
+  /** [[shipmentsNearOrderRewritten]]'s query on a session carrying [[RangeJoinRewriteConfs]]. */
+  private[graft] def shipmentsNearOrderRewrittenOn(s: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(s, sfDir)
       .groupBy(col("l_shipdate")).agg(count(lit(1)).as("__cnt"))
     // keep `hi` the same timestamp flavor (NTZ) as l_shipdate: the rule

@@ -22,28 +22,12 @@ object SimilarityJoinDemo {
     spark.sparkContext.setLogLevel("WARN")
     def run(label: String, ruleOn: Boolean): Long = {
       val t0 = System.nanoTime()
-      // jaccardPairsRewrite pins the rule conf ON inside its own fresh
-      // session, so the OFF leg cannot reuse it — the control rebuilds
-      // the same theta join by hand on a session with the rule disabled.
-      val df =
-        if (ruleOn) Dedup.jaccardPairsRewrite(spark, sfDir, maxDocId = Some(bound))
-        else {
-          import org.apache.spark.sql.functions._
-          val s = spark.newSession()
-          s.conf.set("spark.graft.similarityJoinRewrite", "false")
-          s.conf.set("spark.sql.legacy.sizeOfNull", "false")
-          val docs = graft.core.Tables.documents(s, sfDir)
-            .where(col("doc_id") < bound)
-            .repartition(col("doc_id"))
-            .select(col("doc_id"),
-              transform(graft.functions.Text.shingles(col("text"), 3),
-                sh => graft.functions.Hashing.stableHash60(sh)).as("sh"))
-          val a = docs.select(col("doc_id").as("doc1"), col("sh").as("sh1"))
-          val b = docs.select(col("doc_id").as("doc2"), col("sh").as("sh2"))
-          a.join(b, col("doc1") < col("doc2")
-              && graft.functions.Text.jaccardSim(col("sh1"), col("sh2")) >= 0.8)
-            .select(col("doc1"), col("doc2"))
-        }
+      // both legs run q75's own query; the control only flips the rule
+      // off, on a derived session (not newSession: a new session would
+      // put its codegen recompiles inside the timed leg)
+      val s = GraftSession.derived(spark, Dedup.SimilarityJoinRewriteConfs +
+        ("spark.graft.similarityJoinRewrite" -> ruleOn.toString))
+      val df = Dedup.jaccardPairsRewriteOn(s, sfDir, 0.8, Some(bound))
       val n = df.count()
       val plan = df.queryExecution.executedPlan.toString
       val shape = if (plan.contains("BroadcastNestedLoopJoin")) "BNLJ"

@@ -14,20 +14,6 @@ class Round17OpsSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Bit-level row image: doubles via doubleToRawLongBits (a 1-ulp or
-    * -0.0 drift fails), everything else via toString.
-    */
-  private def bits(df: DataFrame): Seq[String] = df.collect().toSeq.map { r =>
-    (0 until r.length).map { i =>
-      r.get(i) match {
-        case null => "∅"
-        case d: java.lang.Double =>
-          java.lang.Double.doubleToRawLongBits(d).toString
-        case v => v.toString
-      }
-    }.mkString("|")
-  }.sorted
-
   // ---- q38: grain/window exact-percentile rewrite ----
 
   /** The exact aggregate form q38 shipped with through r16. */
