@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver benchmark: every SparkEntry query against SPARK_GRAFT_SF_DIR,
   * N runs each (SPARK_GRAFT_BENCH_RUNS, default 5), reporting per-query
@@ -37,25 +36,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val sfDir = graft.core.GraftSession.sfDir
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
-    // disk-backed memo tier (SessionMemo.durable): a warm host serves the
-    // deterministic memo families from the fingerprinted parquet cache
-    // instead of rebuilding them every JVM — the r11 cold-pass regression
-    sys.props.getOrElseUpdate("graft.memo.durable",
-      sys.env.getOrElse("SPARK_GRAFT_MEMO_DURABLE", "true"))
-    val spark = graft.core.GraftSession.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // warm up the JVM/codegen/file-listing paths outside the timed region
-    // with a fixed cheap query (an arbitrary Map-order pick could be an
-    // expensive one, double-counting its work)
-    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).write
-      .format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = graft.core.GraftSession.driver()
+    graft.core.GraftSession.warmUp(spark, sfDir)
 
     // optional comma-separated name filter for local spot-checks
     // (SPARK_GRAFT_BENCH_ONLY); the driver never sets it — full run

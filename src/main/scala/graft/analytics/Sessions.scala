@@ -166,21 +166,28 @@ object Sessions {
         round(sum(col("value")), 2).as("session_value"))
       .drop("session_window")
 
-  /** Session GAP-parameter sweep: for each candidate inactivity gap, the
-    * session count, total event mass, singleton-session count and mean
-    * session depth — the sensitivity table that justifies (or indicts)
-    * the 30-minute default before every downstream session metric
-    * inherits it. Read for the knee: where halving the gap stops
-    * multiplying sessions, the data's natural rhythm sits.
-    *
-    * Determinism: integer counts; one rounded division per gap.
-    *
-    * Scale shape: ONE user-keyed window pass computes the inter-event
-    * gap; each candidate's session ids are cumulative sums over that
-    * SAME window (Spark plans one Window operator for all of them); per
-    * gap one (user, sid) rollup — |gaps| equality-keyed aggregates, no
-    * re-scan of the raw stream.
+  /** The user-keyed gap-session stage: events' (user_id, ts, event_id),
+    * `gap_us` to the user's previous event, and per (name, gap seconds)
+    * one running session id that starts a new session wherever `gap_us`
+    * exceeds the gap. Gaps compare in exact microseconds (unix_micros vs
+    * the oracle's epoch_us — no double seconds near the boundary), in the
+    * (user_id, ts, event_id) total order; every id is one running sum
+    * over the same window, so Spark plans them over one shuffle and sort.
     */
+  private def gapSessionIds(spark: SparkSession, sfDir: String,
+      ids: (String, Long)*): DataFrame = {
+    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ids.foldLeft(Tables.events(spark, sfDir)
+        .select(col("user_id"), col("ts"), col("event_id"))
+        .withColumn("gap_us",
+          unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))) {
+      case (df, (name, gapSec)) => df.withColumn(name,
+        sum(when(col("gap_us").isNull
+          || col("gap_us") > gapSec * 1000000L, 1L).otherwise(0L)).over(run))
+    }
+  }
+
   /** Capped gap-sessionization histogram (q298): 30-min-gap sessions are
     * additionally SPLIT at `cap` events — the "max session length" rule
     * every production sessionizer carries so a bot or instrumented replay
@@ -204,15 +211,7 @@ object Sessions {
     */
   def cappedSessionHistogram(spark: SparkSession, sfDir: String,
       gapSec: Int = 1800, cap: Int = 2): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val gapped = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("gsid",
-        sum(when(col("gap_us").isNull
-          || col("gap_us") > gapSec * 1000000L, 1L).otherwise(0L)).over(run))
+    val gapped = gapSessionIds(spark, sfDir, "gsid" -> gapSec)
     val rnW = Window.partitionBy(col("user_id"), col("gsid"))
       .orderBy(col("ts"), col("event_id"))
     gapped
@@ -225,20 +224,25 @@ object Sessions {
         sum(when(col("sub") > 0, 1L).otherwise(0L)).as("n_from_splits"))
   }
 
+  /** Session GAP-parameter sweep: for each candidate inactivity gap, the
+    * session count, total event mass, singleton-session count and mean
+    * session depth — the sensitivity table that justifies (or indicts)
+    * the 30-minute default before every downstream session metric
+    * inherits it. Read for the knee: where halving the gap stops
+    * multiplying sessions, the data's natural rhythm sits.
+    *
+    * Determinism: integer counts; one rounded division per gap.
+    *
+    * Scale shape: ONE user-keyed window pass computes the inter-event
+    * gap; each candidate's session ids are cumulative sums over that
+    * SAME window (Spark plans one Window operator for all of them); per
+    * gap one (user, sid) rollup — |gaps| equality-keyed aggregates, no
+    * re-scan of the raw stream.
+    */
   def sessionGapSweep(spark: SparkSession, sfDir: String,
       gapsSec: Seq[Int] = Seq(900, 1800, 3600)): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val flagged = gapsSec.foldLeft(
-      Tables.events(spark, sfDir)
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("gap_us",
-          unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))) {
-      case (df, g) => df.withColumn(s"sid_$g",
-        sum(when(col("gap_us").isNull
-          || col("gap_us") > g * 1000000L, 1L).otherwise(0L)).over(run))
-    }.localCheckpoint()
+    val flagged = gapSessionIds(spark, sfDir,
+      gapsSec.map(g => s"sid_$g" -> g.toLong): _*).localCheckpoint()
     gapsSec.map { g =>
       flagged.groupBy(col("user_id"), col(s"sid_$g"))
         .agg(count(lit(1)).as("sz"))
@@ -267,16 +271,7 @@ object Sessions {
     */
   def sessionReturnGaps(spark: SparkSession, sfDir: String,
       gapSec: Long = 1800L): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val sess = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("sid",
-        sum(when(col("gap_us").isNull
-          || col("gap_us") > gapSec * 1000000L, 1L).otherwise(0L)).over(run))
+    val sess = gapSessionIds(spark, sfDir, "sid" -> gapSec)
       .groupBy(col("user_id"), col("sid"))
       .agg(min(unix_micros(col("ts"))).as("start_us"),
         max(unix_micros(col("ts"))).as("end_us"))
@@ -312,16 +307,7 @@ object Sessions {
     */
   def sessionPeakRate(spark: SparkSession, sfDir: String,
       gapSec: Long = 1800L): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val run = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val peaks = Tables.events(spark, sfDir)
-      .select(col("user_id"), col("ts"), col("event_id"))
-      .withColumn("gap_us",
-        unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(w))
-      .withColumn("sid",
-        sum(when(col("gap_us").isNull
-          || col("gap_us") > gapSec * 1000000L, 1L).otherwise(0L)).over(run))
+    val peaks = gapSessionIds(spark, sfDir, "sid" -> gapSec)
       .groupBy(col("user_id"), col("sid"),
         expr("unix_micros(ts) DIV 60000000").as("minute"))
       .agg(count(lit(1)).as("in_minute"))

@@ -65,6 +65,39 @@ object GraftSession {
         })
     }
 
+  /** The data dir the driver-run mains read: `SPARK_GRAFT_SF_DIR`, sf0.1 by default. */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** The session of the driver-run mains (Bench, Verify, tools.Probe):
+    * `local[SPARK_GRAFT_CPUS]` (4 by default) with as many shuffle
+    * partitions, and the disk-backed memo tier (SessionMemo.durable) on
+    * unless `SPARK_GRAFT_MEMO_DURABLE=false` or the JVM already sets the
+    * `graft.memo.durable` property. A warm host then serves the
+    * deterministic memo families from the fingerprinted parquet cache
+    * instead of rebuilding them every JVM (the r11 cold-pass regression).
+    */
+  def driver(logLevel: String = "ERROR"): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    sys.props.getOrElseUpdate("graft.memo.durable",
+      sys.env.getOrElse("SPARK_GRAFT_MEMO_DURABLE", "true"))
+    val spark = configure(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
+  /** Untimed warm-up of the JVM, codegen and file-listing paths, so they
+    * do not land on the first timed query. Runs a fixed cheap query (an
+    * arbitrary catalogue pick could be an expensive one, double-counting
+    * its work); a failure here is left to the timed runs to report.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try graft.SparkEntry.queries("q01_pricing_summary")(spark, sfDir).write
+      .format("noop").mode("overwrite").save()
+    catch { case _: Throwable => () }
+
   /** Local session used by tests and ad-hoc mains. */
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val spark = configure(

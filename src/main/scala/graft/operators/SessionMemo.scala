@@ -126,7 +126,7 @@ private[graft] object SessionMemo {
     * session).
     *
     * OPT-IN via the `graft.memo.durable` system property: the
-    * driver-contract mains (Bench/Verify/TimeOne) enable it; tests and
+    * driver-run mains (GraftSession.driver) enable it; tests and
     * library consumers keep the pure in-memory behavior (plan-shape
     * sweeps stay deterministic regardless of /tmp state). Failure
     * semantics (r13 advice 4): a failure while the BUILDER'S OWN PLAN

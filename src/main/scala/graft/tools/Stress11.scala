@@ -138,9 +138,8 @@ object Stress11 extends ScanMeter {
       read
     }
     time("DPP-disabled control scan reads all 500 partitions") {
-      val off = spark.newSession()
-      off.conf.set(
-        "spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
+      val off = GraftSession.derived(spark,
+        Map("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false"))
       val (rows, read) = runAndMeter(Lake.dppScanOf(
         off.read.parquet(s"$tmp/fact"), off.read.parquet(s"$tmp/dim")))
       assert(rows.size == 5, "content must not depend on DPP")

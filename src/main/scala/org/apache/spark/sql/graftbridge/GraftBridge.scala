@@ -28,4 +28,11 @@ object GraftBridge {
       : org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`SparkContext.listenerBus` is `private[spark]`): counts a listener
+    * keeps are then final for the jobs that have already ended.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

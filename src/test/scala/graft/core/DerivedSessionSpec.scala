@@ -111,7 +111,7 @@ class DerivedSessionSpec extends SparkTestBase {
     val allowed = Set(root.resolve("core/GraftSession.scala"))
     val offenders = Files.walk(root).iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(p => allowed(p) || p.startsWith(root.resolve("tools")))
+      .filterNot(allowed)
       .filter(p => """\bnewSession\s*\(""".r.findFirstIn(Files.readString(p)).nonEmpty)
       .map(root.relativize(_: Path).toString).toList
     assert(offenders.isEmpty,

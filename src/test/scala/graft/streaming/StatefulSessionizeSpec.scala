@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkTestBase
 import graft.model.Models.WebEvent
@@ -14,26 +15,35 @@ class StatefulSessionizeSpec extends SparkTestBase {
       etype: String = "click"): WebEvent =
     WebEvent(user, etype, "/home", ts(minute, sec), "organic")
 
-  test("flatMapGroupsWithState closes sessions by gap timeout") {
+  private val rocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  // the timeout path on both state stores: the default HDFS-backed one and
+  // RocksDB (the 100 TB state path is a conf switch, not a code change)
+  for ((provider, suffix) <- Seq(None -> "", Some(rocksDb) -> " on the RocksDB state store"))
+  test("flatMapGroupsWithState closes sessions by gap timeout" + suffix) {
     val s = spark
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    provider.foreach(spark.conf.set(key, _))
     val input = MemoryStream[WebEvent]
+    val table = if (provider.isEmpty) "fmgws" else "fmgws_rocks"
     val q = StatefulSessionize
       .sessionize(spark, input.toDS(), gapMs = 5 * 60 * 1000L)
-      .writeStream.format("memory").queryName("fmgws")
+      .writeStream.format("memory").queryName(table)
       .outputMode("append").start()
     try {
       // session: 10:00-10:02; then nothing from u1
       input.addData(ev("u1", 0), ev("u1", 2, 0, "purchase"))
       q.processAllAvailable()
-      assert(spark.table("fmgws").count() === 0)
+      assert(spark.table(table).count() === 0)
       // u9 at 10:30 → watermark 10:20 > 10:02+5min → u1's session times out
       input.addData(ev("u9", 30))
       q.processAllAvailable()
       input.addData(ev("u9", 31)) // extra batch so the timeout fires
       q.processAllAvailable()
-      val rows = spark.table("fmgws").collect()
+      val rows = spark.table(table).collect()
         .filter(_.getAs[String]("user_id") == "u1")
       assert(rows.length === 1)
       val r = rows.head
@@ -42,7 +52,9 @@ class StatefulSessionizeSpec extends SparkTestBase {
       assert(r.getAs[String]("first_event_type") === "click")
       assert(r.getAs[String]("last_event_type") === "purchase")
       assert(r.getAs[String]("closed_by") === "timeout")
-    } finally q.stop()
+      assert(provider.isEmpty || q.lastProgress.stateOperators.head.customMetrics
+        .keySet.asScala.exists(_.startsWith("rocksdb")), "the state store is not RocksDB")
+    } finally { q.stop(); provider.foreach(_ => spark.conf.unset(key)) }
   }
 
   test("late cross-batch events lower session start and keep true last type") {
