@@ -142,15 +142,6 @@ object Vectors {
 
   def l2Norm(a: Column): Column = sqrt(dotProduct(a, a))
 
-  /** Built-in-composition cosine — same semantics as [[cosine]], kept for
-    * plan-comparison tests and as a fallback path.
-    */
-  def cosineBuiltin(a: Column, b: Column): Column = {
-    val d = dotProduct(a, b)
-    val na = l2Norm(a); val nb = l2Norm(b)
-    when(na === 0.0 || nb === 0.0, 0.0).otherwise(d / (na * nb))
-  }
-
   /** Pinned ±1 hyperplane pattern: plane j's i-th component is derived from
     * the MD5 of "j:i" (LSB of byte 0). Shared by [[hyperplaneBucket]] and
     * the DuckDB oracle generator so both engines bucket identically.

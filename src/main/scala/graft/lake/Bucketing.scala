@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed tables for shuffle-free co-located joins — the standing answer
   * to repeated large-fact joins at 100 TB: pay the shuffle once at write
@@ -22,11 +22,4 @@ object Bucketing {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Join two tables bucketed on the same key. With matching bucket specs
-    * the plan contains no Exchange on either side.
-    */
-  def coLocatedJoin(spark: SparkSession, left: String, right: String,
-      key: String): DataFrame =
-    spark.table(left).join(spark.table(right), key)
 }

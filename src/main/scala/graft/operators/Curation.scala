@@ -2676,7 +2676,8 @@ object Curation {
     * identical output (same min-label fixpoint), gated against the SAME
     * oracle as q348; the resolver to reach for when the occupied grid
     * outgrows the driver (the q50 / q72 precedent, cluster-resolver
-    * flavor). Stress14 validates it at 1.5M points with planted truth.
+    * flavor). `tools.Stress dbscan` validates it at 1.5M points with
+    * planted truth.
     */
   def gridDbscanStar(spark: SparkSession, sfDir: String): DataFrame =
     gridDbscanGated(spark, sfDir, distributedResolve = true)
@@ -2732,8 +2733,8 @@ object Curation {
     * (and the rep tables join by shuffle, not broadcast) — the
     * contraction step is the same either way, and the star fixpoint is
     * the identical min-label closure, so both resolvers emit the same
-    * labels wherever both finish (Stress14 checks equality on planted
-    * clusters at a widened domain).
+    * labels wherever both finish (`tools.Stress dbscan` checks equality on
+    * planted clusters at a widened domain).
     */
   def gridDbscanOf(spark: SparkSession, feats: DataFrame,
       epsX: Long, epsY: Long, minPts: Long,

@@ -1333,7 +1333,7 @@ object Similarity {
     * a full job barrier: ~1.5 s of scheduling at gate scale, k−1 global
     * syncs at any scale). One shuffle on query_id, then embarrassingly
     * parallel — re-rank cost stays linear in the query count
-    * (tools.Stress15 drives 200k queries through this exact operator).
+    * (`tools.Stress mmr` drives 200k queries through this exact operator).
     * The object stage is Catalyst-opaque by design: its input is the
     * bounded grid, never the corpus.
     *

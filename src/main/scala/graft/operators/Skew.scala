@@ -99,13 +99,6 @@ object Skew {
         col("n_type_events"), col("type_mean_value"))
   }
 
-  /** Top-n most frequent values of a column — the cheap skew probe to run
-    * before choosing a mitigation (one pass + small shuffle).
-    */
-  def keyHistogram(df: DataFrame, key: Column, topN: Int = 20): DataFrame =
-    df.groupBy(key.as("key")).agg(count(lit(1)).as("cnt"))
-      .orderBy(col("cnt").desc).limit(topN)
-
   /** Join-fanout audit (q344) of the events `user_id` key — the numbers a
     * planner (human or AQE) needs BEFORE running a user-grain self-join
     * or fact-fact join: exact fanout order statistics (p50/p90/p99/max,

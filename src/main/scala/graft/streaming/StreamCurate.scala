@@ -29,13 +29,6 @@ object StreamCurate {
           col("dup_trigram_frac") <= maxTrigramDup).cast("int"))
   }
 
-  /** The filtering form: only documents that pass both gates survive. */
-  def filterStream(docs: DataFrame, minQuality: Double = 0.5,
-      maxTrigramDup: Double = 0.2): DataFrame =
-    annotate(docs, minQuality, maxTrigramDup)
-      .where(col("keep") === 1)
-      .drop("keep")
-
   /** The model-based gate ([[Text.modelScore]], the q69 scorer) on a
     * stream: stateless projection, identical scores to the batch path by
     * construction (one shared Column definition).

@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.SparkTestBase
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Operator-level invariants on the real testdata (sf0.001) — these
   * complement the DuckDB oracle with structural properties.
@@ -9,6 +10,11 @@ import org.apache.spark.sql.functions.col
 class OperatorsSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
+
+  /** Top-n most frequent values of a column: the skew probe. */
+  private def keyHistogram(df: DataFrame, key: Column, topN: Int): DataFrame =
+    df.groupBy(key.as("key")).agg(count(lit(1)).as("cnt"))
+      .orderBy(col("cnt").desc).limit(topN)
 
   test("minhash LSH candidates verified by jaccard are a subset of exact pairs") {
     val exact = Dedup.jaccardPairs(spark, sf, threshold = 0.7)
@@ -310,7 +316,7 @@ class OperatorsSpec extends SparkTestBase {
     val salted = Skew.saltedJoin(big, small, "k", salt = 8).collect()
       .map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
     assert(salted === plain)
-    val hist = Skew.keyHistogram(big, col("k"), 1).collect().head
+    val hist = keyHistogram(big, col("k"), 1).collect().head
     assert(hist.getInt(0) === 1 && hist.getLong(1) === 10001L)
   }
 

@@ -15,24 +15,6 @@ class StreamCurateSpec extends SparkTestBase {
   // 3 words: length gate fails (quality < 0.5)
   private val tinyText = "too short doc"
 
-  test("streaming quality filter keeps good docs and drops loops and stubs") {
-    val s = spark
-    import s.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, String)]
-    val q = StreamCurate.filterStream(input.toDF().toDF("doc_id", "text"))
-      .writeStream.format("memory").queryName("scurate")
-      .outputMode("append").start()
-    try {
-      input.addData((1L, goodText), (2L, loopText))
-      q.processAllAvailable()
-      input.addData((3L, tinyText), (4L, goodText))
-      q.processAllAvailable()
-      val kept = spark.table("scurate").collect().map(_.getLong(0)).sorted
-      assert(kept.toSeq === Seq(1L, 4L))
-    } finally q.stop()
-  }
-
   test("annotate agrees with the batch curation gates") {
     val s = spark
     import s.implicits._
