@@ -269,8 +269,7 @@ object TextAnalytics {
       case None =>
         // memoized per plan: one cached LM build per session, not one
         // re-aggregation + checkpoint per invocation
-        val mat = graft.operators.SessionMemo(documents.sparkSession,
-          s"bigramLm|${lpRaw.queryExecution.analyzed.semanticHash()}")(lpRaw)
+        val mat = graft.operators.SessionMemo.ofPlan("bigramLm", lpRaw)
         (mat, mat.count() <= MaxBroadcastLmEntries)
     }
     bg.join(if (hint) broadcast(lp) else lp, Seq("w1", "w2"))

@@ -1506,11 +1506,8 @@ object Curation {
     */
   def decontaminate(spark: SparkSession, sfDir: String,
       n: Int = 8, benchMod: Int = 97): DataFrame =
-    // memoized: q56 and the composed q61 verdict share one gram pass.
-    // The gram-hash mode is part of the key — a cached md5 result must not
-    // answer an xxhash64 request (outputs match, but keep modes distinct)
-    SessionMemo.durable(spark, sfDir, s"decontaminate|$sfDir|$n|$benchMod|" +
-        spark.conf.get("spark.graft.decontamination.hash", "md5")) {
+    // memoized: q56 and the composed q61 verdict share one gram pass
+    SessionMemo.durable(spark, sfDir, s"decontaminate|$sfDir|$n|$benchMod") {
       val docs = Tables.documents(spark, sfDir)
       decontaminateAgainst(
         docs.where(col("doc_id") % benchMod =!= 0),
@@ -1520,39 +1517,21 @@ object Curation {
   /** [[decontaminate]] against an explicit benchmark table — the form a
     * production pipeline calls with its (small, external) eval suite.
     *
-    * Gram hashing is selectable via `spark.graft.decontamination.hash`:
-    * `md5` (default) keeps the 60-bit md5-prefix long that DuckDB can
-    * reproduce (the oracle gate); `xxhash64` swaps in Spark's codegen'd
-    * native hash for the non-oracle production path — same long-keyed plan
-    * shape, no digest allocation per gram. Contamination verdicts depend
-    * only on gram-hash EQUALITY, so both modes flag identical doc sets
-    * (modulo a ~2⁻⁶⁰ collision, spec-checked on a fixture).
+    * Grams are hashed to the 60-bit md5-prefix long that DuckDB reproduces
+    * (the oracle gate); verdicts depend only on gram-hash EQUALITY.
     */
-  /** Gram-hash selector shared by the decontamination variants — see
-    * [[decontaminateAgainst]] for the md5-vs-xxhash64 contract.
-    */
-  private def gramHasher(spark: SparkSession)
-      : org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    spark.conf.get("spark.graft.decontamination.hash", "md5") match {
-      case "md5" => Hashing.stableHash60
-      case "xxhash64" => c => xxhash64(c)
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.decontamination.hash must be md5 or xxhash64, got: $other")
-    }
-
   def decontaminateAgainst(trainDocs: DataFrame, benchDocs: DataFrame,
       n: Int = 8): DataFrame = {
     // grams shuffle as 60-bit md5-prefix longs, not ~60-byte strings: the
     // (doc, gram) distinct dominates at corpus scale and 8-byte keys cut
     // its shuffle bytes ~4× (measured 18.9 → 14.4 s at 100k docs locally —
     // the remaining cost is md5 itself, kept for engine-portable
-    // verification; xxhash64 mode drops that too). Both engines hash md5
-    // identically, so the oracle is exact.
-    val gramHash = gramHasher(trainDocs.sparkSession)
+    // verification). Both engines hash md5 identically, so the oracle is
+    // exact.
     def grams(d: DataFrame): DataFrame = d
       .select(col("doc_id"),
         explode(graft.functions.Text.shingles(col("text"), n)).as("gram"))
-      .select(col("doc_id"), gramHash(col("gram")).as("gram_h"))
+      .select(col("doc_id"), Hashing.stableHash60(col("gram")).as("gram_h"))
     val bench = grams(benchDocs)
       .select(col("gram_h")).distinct().withColumn("hit", lit(1))
     grams(trainDocs).distinct()
@@ -1570,8 +1549,7 @@ object Curation {
     */
   def decontaminateBloom(spark: SparkSession, sfDir: String,
       n: Int = 8, benchMod: Int = 97): DataFrame =
-    SessionMemo.durable(spark, sfDir, s"decontaminateBloom|$sfDir|$n|$benchMod|" +
-        spark.conf.get("spark.graft.decontamination.hash", "md5")) {
+    SessionMemo.durable(spark, sfDir, s"decontaminateBloom|$sfDir|$n|$benchMod") {
       val docs = Tables.documents(spark, sfDir)
       decontaminateBloomAgainst(
         docs.where(col("doc_id") % benchMod =!= 0),
@@ -1613,18 +1591,14 @@ object Curation {
     import org.apache.spark.sql.graftbridge.GraftBridge
     import org.apache.spark.sql.types.BinaryType
     val spark = trainDocs.sparkSession
-    val hashMode = spark.conf.get("spark.graft.decontamination.hash", "md5")
-    val gramHash = gramHasher(spark)
-    def gramArr = array_distinct(
-      transform(graft.functions.Text.shingles(col("text"), n), gramHash))
+    def gramArr = array_distinct(transform(
+      graft.functions.Text.shingles(col("text"), n), Hashing.stableHash60(_)))
     // bench-sized and consumed three times (count, sketch, exact verify) —
-    // cached through SessionMemo (keyed by the bench PLAN's semantic hash +
-    // gram params) so the registration is bounded, evictable, and released
-    // by invalidate() instead of persisting for the session lifetime
-    val bench = SessionMemo(spark,
-      s"bloomBenchGrams|${benchDocs.queryExecution.analyzed.semanticHash()}|$n|$hashMode") {
-      benchDocs.select(explode(gramArr).as("gram_h")).distinct()
-    }
+    // cached through SessionMemo (keyed by its plan, which carries the gram
+    // params) so the registration is bounded, evictable, and released by
+    // invalidate() instead of persisting for the session lifetime
+    val bench = SessionMemo.ofPlan("bloomBenchGrams",
+      benchDocs.select(explode(gramArr).as("gram_h")).distinct())
     // size the sketch to the actual bench cardinality (a bench-sized count,
     // not a corpus job). The single-arg BloomFilterAggregate constructor
     // silently clamps at spark.sql.optimizer.runtime.bloomFilter.maxNumItems
@@ -1800,15 +1774,13 @@ object Curation {
     * right tools when the reference side is benchmark-sized.
     */
   def splitLeakage(spark: SparkSession, sfDir: String, n: Int = 8): DataFrame =
-    SessionMemo.durable(spark, sfDir, s"splitLeakage|$sfDir|$n|" +
-        spark.conf.get("spark.graft.decontamination.hash", "md5")) {
-      val gramHash = gramHasher(spark)
+    SessionMemo.durable(spark, sfDir, s"splitLeakage|$sfDir|$n") {
       val docs = Tables.documents(spark, sfDir)
         .select(col("doc_id"), col("text"), splitColumn.as("split"))
       def grams(d: DataFrame): DataFrame = d
         .select(col("doc_id"), col("split"),
           explode(graft.functions.Text.shingles(col("text"), n)).as("gram"))
-        .select(col("doc_id"), col("split"), gramHash(col("gram")).as("gram_h"))
+        .select(col("doc_id"), col("split"), Hashing.stableHash60(col("gram")).as("gram_h"))
       val holdout = grams(docs.where(col("split") =!= "train")).distinct()
       val trainGrams = grams(docs.where(col("split") === "train"))
         .select(col("gram_h")).distinct().withColumn("hit", lit(1))
@@ -1965,9 +1937,7 @@ object Curation {
         // memoized per plan (like Dedup's helper caches): repeated calls in
         // one session share a single cached build + CacheManager entry
         // instead of re-aggregating and re-checkpointing per invocation
-        val mat = SessionMemo(docs.sparkSession,
-          s"boilerFlagged|${boilerRaw.queryExecution.analyzed.semanticHash()}")(
-          boilerRaw)
+        val mat = SessionMemo.ofPlan("boilerFlagged", boilerRaw)
         (mat, mat.count() <= MaxBroadcastFlaggedChunks)
     }
     chunks

@@ -20,21 +20,13 @@ import graft.functions.{Hashing, Text}
   */
 object Dedup {
 
-  /** Cache a small helper table that feeds multiple DAG branches: lazy (no
-    * job at construction time, unlike localCheckpoint) and fault-tolerant
-    * (lineage intact). Cached blocks are LRU-evicted; callers never need to
-    * unpersist explicitly.
-    */
   /** Shared helper caches (shingle sets, signatures, fingerprints) go
-    * through SessionMemo keyed by the plan's semantic hash: repeated calls
-    * share ONE CacheManager registration (a bare persist per call spammed
-    * "already cached" warnings), and eviction/invalidate can release them
-    * — the same lifecycle fix the round-4 advice drove for the tf-idf and
-    * bloom caches.
+    * through SessionMemo keyed by the plan: repeated calls share ONE
+    * CacheManager registration (a bare persist per call spammed "already
+    * cached" warnings), and eviction/invalidate can release them.
     */
   private def materialized(df: DataFrame): DataFrame =
-    SessionMemo(df.sparkSession,
-      s"dedupMaterialized|${df.queryExecution.analyzed.semanticHash()}")(df)
+    SessionMemo.ofPlan("dedupMaterialized", df)
 
   /** Exact duplicate groups by md5 content hash: one row per distinct
     * content with its canonical (min) doc id and multiplicity.
@@ -284,9 +276,9 @@ object Dedup {
     * and only for surviving candidates. That makes the rewritten plan the
     * production path for the full corpus, and this entry runs UNBOUNDED
     * (rounds 8-12 gated a `doc_id < 1000` window as a naive-vs-rewritten
-    * demo, which kept the query policy-weak for five rounds; the bounded
-    * comparison now lives in [[graft.tools.SimilarityJoinDemo]], where
-    * demos belong — r12 verdict item 2). [[jaccardPairsPrefix]] remains
+    * demo, which kept the query policy-weak for five rounds; the
+    * rule-on ≡ rule-off result and plan checks live in
+    * SimilarityJoinRewriteSpec). [[jaccardPairsPrefix]] remains
     * the hand-tuned operator form (rarest-prefix order + PPJoin positional
     * filter beat the rule's value-order prefix on skewed corpora); the
     * rule is what a user who writes the theta join directly gets.

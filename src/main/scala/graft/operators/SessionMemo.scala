@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.storage.StorageLevel
 
 /** Session-scoped memo of expensive, multiply-consumed curation tables
@@ -31,6 +32,12 @@ import org.apache.spark.storage.StorageLevel
   * the losing thread's already-persisted DataFrame is unpersisted so the
   * race cannot leak a CacheManager registration.
   *
+  * The memo is the one record of what it built: every miss is timed from
+  * evaluating the builder to the end of its materializing count, nested
+  * builds are subtracted, and [[snapshot]] exposes the JVM-wide per-key
+  * build/hit [[Stats]] — Bench charges a run's memo builds to their keys
+  * from two snapshots instead of prebuilding stand-in queries.
+  *
   * ASSUMPTION: the data under a memo key (the parquet files of an sfDir)
   * is immutable for the session — keys carry the inputs' PATHS and
   * parameters, not content hashes. A session that rewrites its input
@@ -40,11 +47,16 @@ import org.apache.spark.storage.StorageLevel
 private[graft] object SessionMemo {
   private val MaxSessions = 64
 
+  /** A table's identity within its session: a string key, or (for
+    * [[ofPlan]]) a name plus the canonicalized analyzed plan.
+    */
+  private final case class Key(name: String, plan: Option[LogicalPlan])
+
   private val bySession =
-    new java.util.LinkedHashMap[SparkSession, ConcurrentHashMap[String, DataFrame]](
+    new java.util.LinkedHashMap[SparkSession, ConcurrentHashMap[Key, DataFrame]](
       16, 0.75f, /* accessOrder = */ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession, ConcurrentHashMap[String, DataFrame]]): Boolean = {
+          e: java.util.Map.Entry[SparkSession, ConcurrentHashMap[Key, DataFrame]]): Boolean = {
         val evict = size() > MaxSessions
         if (evict) e.getValue.forEach { (_, df) =>
           try df.unpersist(blocking = false) catch { case _: Throwable => () }
@@ -53,42 +65,96 @@ private[graft] object SessionMemo {
       }
     }
 
-  private def sessionTables(spark: SparkSession): ConcurrentHashMap[String, DataFrame] =
+  private def sessionTables(spark: SparkSession): ConcurrentHashMap[Key, DataFrame] =
     bySession.synchronized {
       val existing = bySession.get(spark)
       if (existing != null) existing
       else {
-        val m = new ConcurrentHashMap[String, DataFrame]()
+        val m = new ConcurrentHashMap[Key, DataFrame]()
         bySession.put(spark, m)
         m
       }
     }
 
-  def apply(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
+  /** Cumulative record of one memo key: builds (and how many of them
+    * failed to materialize), hits, and the builds' SELF seconds — wall time
+    * from evaluating the builder to the end of its materializing count,
+    * minus the memo builds nested inside it.
+    */
+  final case class Stats(builds: Long, failures: Long, hits: Long, selfSec: Double) {
+    def +(o: Stats): Stats =
+      Stats(builds + o.builds, failures + o.failures, hits + o.hits, selfSec + o.selfSec)
+    def -(o: Stats): Stats =
+      Stats(builds - o.builds, failures - o.failures, hits - o.hits, selfSec - o.selfSec)
+  }
+  object Stats { val zero: Stats = Stats(0, 0, 0, 0.0) }
+
+  // JVM-wide, not per session, so builds on GraftSession.derived children
+  // are counted too; bounded by the number of distinct keys
+  private val stats = new ConcurrentHashMap[String, Stats]()
+
+  // wall nanos of the memo builds recorded on this thread so far: a build's
+  // self time is its wall time minus what this advanced by meanwhile
+  private val recordedNanos = ThreadLocal.withInitial[java.lang.Long](() => 0L)
+
+  /** Every key's cumulative [[Stats]] in this JVM. */
+  def snapshot(): Map[String, Stats] = {
+    import scala.jdk.CollectionConverters._
+    stats.asScala.toMap
+  }
+
+  private def record(name: String, s: Stats): Unit = stats.merge(name, s, _ + _): Unit
+
+  def apply(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    memo(spark, Key(key, None))(build)
+
+  /** `df` itself, memoized under `name` and its canonicalized analyzed
+    * plan: two frames share one table exactly when Spark's `sameResult`
+    * holds (fresh exprIds still match), and distinct plans never share one,
+    * whatever their hashes.
+    */
+  def ofPlan(name: String, df: DataFrame): DataFrame =
+    memo(df.sparkSession,
+      Key(name, Some(df.queryExecution.analyzed.canonicalized)))(df)
+
+  private def memo(spark: SparkSession, key: Key)(build: => DataFrame): DataFrame = {
     val tables = sessionTables(spark)
     val existing = tables.get(key)
-    if (existing != null) existing
-    else {
-      val df = build.persist(StorageLevel.MEMORY_AND_DISK)
+    if (existing != null) {
+      record(key.name, Stats.zero.copy(hits = 1))
+      existing
+    } else {
+      val nested0 = recordedNanos.get
+      val t0 = System.nanoTime()
+      // charges [t0, now) less the nested builds to `key` and returns the
+      // self and total seconds
+      def charge(failed: Boolean): (Double, Double) = {
+        val total = System.nanoTime() - t0
+        val self = total - (recordedNanos.get - nested0)
+        recordedNanos.set(nested0 + total)
+        record(key.name, Stats(1, if (failed) 1 else 0, 0, self / 1e9))
+        (self / 1e9, total / 1e9)
+      }
+      val df =
+        try build.persist(StorageLevel.MEMORY_AND_DISK)
+        catch { case e: Throwable => charge(failed = true); throw e }
       val prev = tables.putIfAbsent(key, df)
       if (prev != null) {
         // lost the benign build race: release this thread's persist so the
         // CacheManager holds exactly one registration per key
         try df.unpersist(blocking = false) catch { case _: Throwable => () }
+        record(key.name, Stats.zero.copy(hits = 1))
         prev
       } else {
-        // materialize NOW and log the build cost: the cache fills with the
-        // full plan output either way (InMemoryRelation doesn't prune per
-        // consumer), and an attributed "[memo] built <key>" line is what
-        // lets a cold-pass regression be traced to the memo that grew
-        // instead of to whichever query happened to touch it first
-        // (PERF.md memo-build table). Nested builds log their own lines.
-        val t0 = System.nanoTime()
-        try {
-          val n = df.count()
-          System.err.println(f"[memo] built $key: $n rows in " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } catch { case _: Throwable => () } // consumer's action will re-throw
+        // materialize NOW: the cache fills with the full plan output either
+        // way (InMemoryRelation doesn't prune per consumer), and the build
+        // is charged to its key instead of to whichever query touched it
+        // first
+        val rows = try Some(df.count()) catch { case _: Throwable => None }
+        val (self, total) = charge(failed = rows.isEmpty)
+        // on failure the consumer's own action re-throws
+        rows.foreach(n => System.err.println(f"[memo] built ${key.name}: " +
+          f"$n rows in $total%.2f s ($self%.2f s self)"))
         df
       }
     }
@@ -512,7 +578,7 @@ private[graft] object SessionMemo {
     */
   private[graft] def cachedKeys(spark: SparkSession): Set[String] = {
     import scala.jdk.CollectionConverters._
-    sessionTables(spark).keySet().asScala.toSet
+    sessionTables(spark).keySet().asScala.map(_.name).toSet
   }
 
   /** Drop (and unpersist) every memoized table of `spark` — for sessions

@@ -167,7 +167,7 @@ class OperatorsSpec extends SparkTestBase {
       .foreach { case (d, c) => assert(d === c) }
   }
 
-  test("decontamination flags identical doc sets under md5 and xxhash64 gram hashing") {
+  test("decontamination flags the overlapping doc under md5 gram hashing") {
     val s = spark
     import s.implicits._
     val train = Seq(
@@ -178,25 +178,13 @@ class OperatorsSpec extends SparkTestBase {
     val bench = Seq(
       (100L, "the quick brown fox jumps over the lazy dog every day")
     ).toDF("doc_id", "text")
-    def run(mode: String) = {
-      spark.conf.set("spark.graft.decontamination.hash", mode)
-      try Curation.decontaminateAgainst(train, bench, n = 8)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-      finally spark.conf.unset("spark.graft.decontamination.hash")
-    }
-    val md5Res = run("md5")
-    val xxRes = run("xxhash64")
-    assert(md5Res === xxRes)
+    val md5Res = Curation.decontaminateAgainst(train, bench, n = 8)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
     assert(md5Res.exists { case (id, _, nc, f) => id == 1L && nc > 0 && f == 1 })
     assert(md5Res.exists { case (id, _, nc, f) => id == 2L && nc == 0 && f == 0 })
-    intercept[IllegalArgumentException] {
-      spark.conf.set("spark.graft.decontamination.hash", "sha1")
-      try Curation.decontaminateAgainst(train, bench, n = 8)
-      finally spark.conf.unset("spark.graft.decontamination.hash")
-    }
   }
 
-  test("bloom decontamination equals the exact broadcast plan in both hash modes") {
+  test("bloom decontamination equals the exact broadcast plan") {
     val s = spark
     import s.implicits._
     val train = Seq(
@@ -210,15 +198,10 @@ class OperatorsSpec extends SparkTestBase {
     ).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-    for (mode <- Seq("md5", "xxhash64")) {
-      spark.conf.set("spark.graft.decontamination.hash", mode)
-      try {
-        val exact = rows(Curation.decontaminateAgainst(train, bench, n = 8))
-        val bloom = rows(Curation.decontaminateBloomAgainst(train, bench, n = 8))
-        assert(bloom === exact, s"bloom plan diverged from exact in $mode mode")
-        assert(!exact.exists(_._1 == 4L), "zero-gram doc must be absent")
-      } finally spark.conf.unset("spark.graft.decontamination.hash")
-    }
+    val exact = rows(Curation.decontaminateAgainst(train, bench, n = 8))
+    val bloom = rows(Curation.decontaminateBloomAgainst(train, bench, n = 8))
+    assert(bloom === exact, "bloom plan diverged from exact")
+    assert(!exact.exists(_._1 == 4L), "zero-gram doc must be absent")
   }
 
   test("bloom decontamination plan carries the sketch prefilter") {
