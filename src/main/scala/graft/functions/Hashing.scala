@@ -97,18 +97,16 @@ object Hashing {
       lit(0L),
       (acc, h) => (acc * lit(31L) + h) % lit(1000000007L))
 
-  /** nbits-wide simhash of a token array (nbits ≤ 32: bits come from the
+  /** nbits-wide SimHash of a token array (nbits ≤ 32: bits come from the
     * 32-bit base hash). Bit j of the result is 1 iff the sum over tokens of
-    * ±1 (per that token's bit j) is positive.
+    * ±1 (per that token's bit j) is positive; duplicates vote once each and
+    * a null array gives 0. Computed per row by the codegen'd
+    * [[SimHash32]] kernel — one md5 per token, one pass over the array —
+    * and masked to the low nbits bits.
     */
   def simhash(tokens: Column, nbits: Int = 32): Column = {
-    val base = transform(tokens, t => stableHash32(t))
-    val bitSums = (0 until nbits).map { j =>
-      aggregate(base, lit(0L),
-        (acc, h) => acc + when(shiftright(h, j) % 2 === 1, 1L).otherwise(-1L))
-    }
-    bitSums.zipWithIndex.map { case (s, j) =>
-      when(s > 0, lit(1L) * lit(1L << j)).otherwise(0L)
-    }.reduce(_ + _)
+    require(nbits >= 1 && nbits <= 32, s"simhash: nbits $nbits not in [1, 32]")
+    val sketch = GraftBridge.column(SimHash32(GraftBridge.expression(tokens)))
+    if (nbits == 32) sketch else sketch.bitwiseAND(lit((1L << nbits) - 1))
   }
 }

@@ -2,8 +2,11 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** First `nibbles` hex characters of md5(input) as an unsigned long — the
@@ -70,5 +73,68 @@ object Md5PrefixLong {
       while (i < 8) { v = (v << 8) | (h(i) & 0xffL); i += 1 }
       v >>> 4
     }
+  }
+}
+
+/** 32-bit SimHash of an `array<string>` of tokens as a BIGINT in
+  * [0, 2^32): every token's 32-bit md5-prefix base hash
+  * ([[Md5PrefixLong]], width 8) casts one ±1 vote per bit, and bit j is
+  * set iff its votes sum to > 0. Duplicate tokens vote once each (term
+  * frequency weighting) and a tie leaves the bit at 0 — the value of the
+  * DuckDB mirror's per-row `list_transform` / `list_sum` and of the
+  * explode → 32 conditional sums → regroup plan this replaces, computed
+  * in one pass over the row's array with one digest per token.
+  *
+  * A null element votes like hash 0 (−1 on every bit), as the null base
+  * hash did in the `when(bit = 1, 1).otherwise(-1)` forms. A null array
+  * gives 0, not null, like the oracle's `CASE WHEN list_sum(NULL) > 0`:
+  * the result is never null.
+  */
+case class SimHash32(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_simhash"
+
+  override def eval(input: InternalRow): Any = {
+    val tokens = child.eval(input)
+    if (tokens == null) 0L else SimHash32.sketch(tokens.asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      long ${ev.value} = ${c.isNull} ? 0L
+        : graft.functions.SimHash32$$.MODULE$$.sketch(${c.value});
+      """, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object SimHash32 {
+  /** The sketch of one token array (elements are UTF-8 strings). */
+  def sketch(tokens: ArrayData): Long = {
+    val votes = new Array[Int](32)
+    val n = tokens.numElements()
+    var i = 0
+    while (i < n) {
+      val h = if (tokens.isNullAt(i)) 0L
+        else Md5PrefixLong.prefix(tokens.getUTF8String(i).getBytes, 8)
+      var j = 0
+      while (j < 32) {
+        votes(j) += (if (((h >>> j) & 1L) == 1L) 1 else -1)
+        j += 1
+      }
+      i += 1
+    }
+    var out = 0L
+    var j = 0
+    while (j < 32) {
+      if (votes(j) > 0) out |= 1L << j
+      j += 1
+    }
+    out
   }
 }

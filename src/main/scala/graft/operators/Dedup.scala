@@ -933,23 +933,21 @@ object Dedup {
           .as("n_pairs"))
 
   /** Per-document 32-bit SimHash over whitespace tokens (term-frequency
-    * weighted: duplicates vote once each, so no distinct). Same explode +
-    * aggregate plan shape as [[minhashSignatures]] and for the same reason:
-    * one md5 per token row, 32 conditional-sum aggregates, single shuffle.
+    * weighted: duplicates vote once each, so no distinct). One narrow
+    * projection over the scan: the codegen'd [[Hashing.simhash]] kernel
+    * computes each document's sketch from its own token array, so there
+    * is no token explode, no aggregate and no shuffle — `doc_id` is the
+    * documents key, so the per-row result is the per-doc one. A null-text
+    * document is dropped (the DuckDB oracle instead gives it simhash 0;
+    * no testdata drop has one, see COVERAGE.md q26).
     */
-  def simhashDocs(spark: SparkSession, sfDir: String): DataFrame = {
-    val hashed = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
-      .select(col("doc_id"), Hashing.stableHash32(col("tok")).as("h"))
-    val bitSum = (j: Int) =>
-      sum(when(shiftright(col("h"), j) % 2 === 1, 1L).otherwise(-1L)).as(s"b$j")
-    hashed.groupBy(col("doc_id"))
-      .agg(bitSum(0), (1 until 32).map(bitSum): _*)
-      .select(col("doc_id"),
-        (0 until 32).map(j =>
-          when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
-          .reduce(_ + _).as("simhash"))
-  }
+  def simhashDocs(spark: SparkSession, sfDir: String): DataFrame =
+    simhashDocsOf(Tables.documents(spark, sfDir))
+
+  /** [[simhashDocs]] over an arbitrary (doc_id, text) frame. */
+  def simhashDocsOf(documents: DataFrame): DataFrame =
+    documents.where(col("text").isNotNull)
+      .select(col("doc_id"), Hashing.simhash(Text.tokens(col("text"))).as("simhash"))
 
   /** SimHash near-dup pairs with hamming distance ≤ maxHamming, found via
     * the pigeonhole chunk join: the 32-bit hash splits into (maxHamming+1)

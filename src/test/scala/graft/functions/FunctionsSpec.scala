@@ -71,6 +71,23 @@ class FunctionsSpec extends SparkTestBase {
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
     assert(ham(hs(0), hs(1)) <= 4)
     assert(ham(hs(0), hs(2)) > 4)
+    // the kernel equals the 32-aggregate lambda form it replaced
+    val lambda = Seq(base, base + " x", (1 to 60).map(i => s"zzz$i").mkString(" "))
+      .toDF("text").select(simhashLambda(Text.tokens(col("text")), 32))
+      .collect().map(_.getLong(0))
+    assert(hs.toSeq === lambda.toSeq)
+  }
+
+  /** The replaced `Hashing.simhash` body: one `aggregate` lambda per bit. */
+  private def simhashLambda(tokens: Column, nbits: Int): Column = {
+    val base = transform(tokens, t => Hashing.stableHash32(t))
+    val bitSums = (0 until nbits).map { j =>
+      aggregate(base, lit(0L),
+        (acc, h) => acc + when(shiftright(h, j) % 2 === 1, 1L).otherwise(-1L))
+    }
+    bitSums.zipWithIndex.map { case (s, j) =>
+      when(s > 0, lit(1L) * lit(1L << j)).otherwise(0L)
+    }.reduce(_ + _)
   }
 
   test("codegen cosine equals the built-in composition and handles edges") {
