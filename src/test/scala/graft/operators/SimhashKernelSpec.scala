@@ -19,6 +19,8 @@ import org.apache.spark.sql.functions._
   */
 class SimhashKernelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
+  private val testdata = "/root/testdata" // TESTDATA.md
+
   /** The replaced `Dedup.simhashDocs`, verbatim but for its input frame. */
   private def oldSimhashDocsOf(documents: DataFrame): DataFrame = {
     val hashed = documents
@@ -43,11 +45,11 @@ class SimhashKernelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(bits(after) === bits(before))
   }
 
-  for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01"))
-    test(s"kernel rows equal the explode/regroup form on ${sf.split('/').last} documents") {
-      val docs = Tables.documents(spark, sf)
+  for (scale <- Seq("sf0.001", "sf0.01"))
+    test(s"kernel rows equal the explode/regroup form on $scale documents") {
+      val docs = Tables.documents(spark, s"$testdata/$scale")
       assertSameAsOld(docs)
-      assert(Dedup.simhashDocs(spark, sf).count() === docs.count())
+      assert(Dedup.simhashDocs(spark, s"$testdata/$scale").count() === docs.count())
     }
 
   test("kernel rows equal the explode/regroup form on edge-case text") {
@@ -95,7 +97,7 @@ class SimhashKernelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("simhashDocs is one narrow projection: no Exchange, Generate or HashAggregate") {
-    val plan = executed(Dedup.simhashDocs(spark, "/root/testdata/sf0.001"))
+    val plan = executed(Dedup.simhashDocs(spark, s"$testdata/sf0.001"))
     val offending = collect(plan) {
       case p: Exchange => p.nodeName
       case p: GenerateExec => p.nodeName
@@ -106,7 +108,7 @@ class SimhashKernelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   test("q261 executes one BroadcastExchange and no shuffle Exchange") {
     val plan = executed(graft.SparkEntry.queries("q261_hamming_join_rewrite")(
-      spark, "/root/testdata/sf0.001"))
+      spark, s"$testdata/sf0.001"))
     assert(collect(plan) { case b: BroadcastExchangeExec => b }.size === 1, plan.toString)
     assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
   }
