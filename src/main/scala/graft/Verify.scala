@@ -10,9 +10,9 @@ object Verify {
     // cache key covers both the data files and the compiled classes, and
     // the oracle compare would flag any stale read regardless. The gate's
     // INDEPENDENCE from the cache layer is still worth exercising:
-    // SPARK_GRAFT_MEMO_DURABLE=false (or GRAFT_MEMO_DIR=<fresh dir>) runs
-    // the oracle gate fully cold — one such run is part of the per-round
-    // verify recipe (r12 verdict item 4)
+    // SPARK_GRAFT_MEMO_DURABLE=false runs every memo family cold (the
+    // q382-q384 layouts stay cached), GRAFT_MEMO_DIR=<fresh dir> runs the
+    // whole oracle gate cold — one such run is part of the verify recipe
     val spark = graft.core.GraftSession.driver("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

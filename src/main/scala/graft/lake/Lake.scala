@@ -20,13 +20,15 @@ import org.apache.spark.sql.Row
   */
 object Lake {
 
-  /** K2/ST8: append-mode partitioned parquet streaming sink with
-    * checkpointing (exactly-once via the file-sink log).
+  /** K2/ST8: append-mode partitioned streaming sink with checkpointing
+    * (exactly-once via the file-sink log, which is format-agnostic, so it
+    * holds for every [[writePartitioned]] format).
     */
   def streamingSink(df: DataFrame, path: String, checkpoint: String,
-      partitionCol: String = "extracted_date"): DataStreamWriter[Row] =
+      partitionCol: String = "extracted_date",
+      format: String = "parquet"): DataStreamWriter[Row] =
     df.writeStream
-      .format("parquet")
+      .format(format)
       .outputMode(OutputMode.Append())
       .option("path", path)
       .option("checkpointLocation", checkpoint)
@@ -36,10 +38,16 @@ object Lake {
       partitionCol: String = "extracted_date"): StreamingQuery =
     streamingSink(df, path, checkpoint, partitionCol).start()
 
-  /** Batch write, same layout. */
+  /** Batch write, same layout, in one of the lake's four formats:
+    * "parquet", "orc" (the second columnar format, for interop with
+    * ORC-producing warehouses), "json" (JSON lines) or "csv" (with a
+    * header row).
+    */
   def writePartitioned(df: DataFrame, path: String,
-      partitionCol: String = "extracted_date"): Unit =
-    df.write.mode("append").partitionBy(partitionCol).parquet(path)
+      partitionCol: String = "extracted_date",
+      format: String = "parquet"): Unit =
+    df.write.mode("append").options(formatOptions(format))
+      .partitionBy(partitionCol).format(format).save(path)
 
   /** Z-order clustered batch write (beyond reference — the layout the
     * q329 audit measures, made real): range-partition on the Morton
@@ -69,34 +77,37 @@ object Lake {
 
   /** Clustered-scan round trip (q382): [[writeClustered]] driven through
     * the SCAN path end-to-end — bin lineitem into the q329 (db, pb)
-    * buckets, write the z-clustered table once per INPUT FINGERPRINT
-    * (size + mtime of the source parquet, so a regenerated sfDir
-    * re-clusters instead of serving a stale layout), then read it back
-    * through the parquet scan with the 2-D predicate pushed down and
-    * aggregate per return flag. The RESULT is layout-invariant — the
-    * DuckDB oracle computes it straight off the raw table — while the
-    * I/O is not: ClusteredScanSpec executes this same scan and asserts
-    * the FileSourceScan's numOutputRows (rows surviving parquet
-    * row-group pruning) is a fraction of the table, where the natural
-    * layout reads everything.
+    * buckets, publish the z-clustered table once per [[DurableCache]]
+    * fingerprint (so a regenerated or rewritten sfDir re-clusters instead
+    * of serving a stale layout), then read it back through the parquet
+    * scan with the 2-D predicate pushed down and aggregate per return
+    * flag. The RESULT is layout-invariant — the DuckDB oracle computes it
+    * straight off the raw table — while the I/O is not: ClusteredScanSpec
+    * executes this same scan and asserts the FileSourceScan's
+    * numOutputRows (rows surviving parquet row-group pruning) is a
+    * fraction of the table, where the natural layout reads everything.
     *
     * Scale shape: the write is one range shuffle + per-partition sort
     * (the writeClustered contract); the read is a pruned scan + one
     * map-side-combinable aggregate over the surviving rows. At 100 TB
     * the fingerprint check is a table-format snapshot id.
     */
-  def clusteredScan(spark: SparkSession, sfDir: String): DataFrame = {
-    import graft.core.Tables
-    val binned = Tables.lineitem(spark, sfDir)
+  def clusteredScan(spark: SparkSession, sfDir: String): DataFrame =
+    clusteredScanAggregate(spark.read.parquet(clusteredLineitem(spark, sfDir)))
+
+  /** The published q382 layout's directory. */
+  def clusteredLineitem(spark: SparkSession, sfDir: String): String =
+    DurableCache.publish(spark, sfDir, "lineitem_z")(p =>
+      writeClustered(lineitemBins(spark, sfDir), p, Seq("db", "pb"),
+        numFiles = 16))
+
+  /** The q382 rows: return flag, quantity in cents and the q329 buckets. */
+  def lineitemBins(spark: SparkSession, sfDir: String): DataFrame =
+    graft.core.Tables.lineitem(spark, sfDir)
       .select(col("l_returnflag"),
         round(col("l_quantity") * 100, 0).cast("long").as("qc"),
         graft.analytics.Relational.shipDayBucket.as("db"),
         graft.analytics.Relational.priceBucket.as("pb"))
-    val path = clusteredLineitemPath(spark, sfDir)
-    publishFingerprinted(spark, path)(p =>
-      writeClustered(binned, p, Seq("db", "pb"), numFiles = 16))
-    clusteredScanAggregate(spark.read.parquet(path))
-  }
 
   /** The q382 read side, factored so the spec can run it against any
     * layout: 2-D box predicate, per-flag exact-integer rollup.
@@ -110,127 +121,6 @@ object Lake {
         sum(col("db")).cast("long").as("sum_db"),
         sum(col("pb")).cast("long").as("sum_pb"))
 
-  /** Deterministic tmp location for the q382 clustered copy, keyed by
-    * the source file's (length, mtime) fingerprint.
-    */
-  def clusteredLineitemPath(spark: SparkSession, sfDir: String): String =
-    fingerprintedPath(spark, sfDir, "lineitem", "lineitem_z_d10p400b8f16")
-
-  /** The cache key is (source len+mtime, `name`) — `name` MUST encode the
-    * derived layout's transform parameters (bucket widths, bits, file
-    * counts, anchors), because a code change that alters the transform
-    * with an unchanged source would otherwise serve the STALE derived
-    * table from a warm /tmp. Bump the token when the transform changes.
-    */
-  private[graft] def fingerprintedPath(spark: SparkSession, sfDir: String,
-      table: String, name: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
-    val fs = src.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = fs.getFileStatus(src)
-    val fp = s"${st.getLen}_${st.getModificationTime}"
-    s"${sys.props("java.io.tmpdir")}/graft-clustered/$fp/$name"
-  }
-
-  /** Publish a derived table into a [[fingerprintedPath]] destination
-    * ATOMICALLY: `write` lands in a process-unique sibling temp dir that
-    * is then renamed into place. Two concurrent JVMs (a bench and a spec
-    * run) can both observe `_SUCCESS` missing and build; with an in-place
-    * mode(overwrite) write the loser would delete the winner's directory
-    * mid-read. With publish-by-rename, readers only ever see a complete
-    * directory: whoever renames first wins, the loser detects the
-    * now-complete destination and discards its temp copy (the
-    * MaintainedTable swap pattern).
-    */
-  private[graft] def publishFingerprinted(spark: SparkSession,
-      dest: String)(write: String => Unit): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val destPath = new org.apache.hadoop.fs.Path(dest)
-    val fs = destPath.getFileSystem(conf)
-    val done = new org.apache.hadoop.fs.Path(destPath, "_SUCCESS")
-    if (fs.exists(done)) return
-    val tmp = new org.apache.hadoop.fs.Path(destPath.getParent,
-      s".${destPath.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-    write(tmp.toString)
-    fs.mkdirs(destPath.getParent)
-    // a leftover INCOMPLETE destination (a writer that crashed before its
-    // rename, or a pre-atomic in-place write) blocks the rename forever.
-    // Move it ASIDE first instead of deleting in place: after the atomic
-    // rename-to-trash nobody can complete it anymore, so checking the
-    // trash copy for _SUCCESS decides race-free whether we swept a
-    // genuine incomplete leftover (drop it) or a WINNER that published
-    // between the done check and the sweep (reinstall their complete
-    // copy; a plain delete here would have destroyed it — the r11
-    // advice's residual TOCTOU)
-    if (fs.exists(destPath) && !fs.exists(done)) {
-      val trash = new org.apache.hadoop.fs.Path(destPath.getParent,
-        s".${destPath.getName}.trash-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      if (fs.rename(destPath, trash)) {
-        if (fs.exists(new org.apache.hadoop.fs.Path(trash, "_SUCCESS"))) {
-          // swept a complete winner: put it back (or drop our sweep if a
-          // third writer already reinstalled while it sat in trash).
-          // A refused reinstall does NOT by itself prove a third writer —
-          // a transient fs refusal would leave dest absent with the only
-          // complete copy in trash, so deleting is only safe once
-          // dest/_SUCCESS is POSITIVELY observed; otherwise retry, and as
-          // a last resort leave the trash copy on disk (a leaked dir; the
-          // next identical deterministic build republishes) rather than
-          // destroy the winner (r12 advice 3)
-          var reinstalled = fs.rename(trash, destPath)
-          var retries = 2
-          while (!reinstalled && !fs.exists(done) && retries > 0) {
-            retries -= 1
-            reinstalled = fs.rename(trash, destPath)
-          }
-          if (!reinstalled) {
-            if (fs.exists(done)) fs.delete(trash, true) // third writer won
-            else System.err.println(s"[lake] reinstall of swept winner " +
-              s"$destPath kept refusing with no complete destination; " +
-              s"leaving complete copy at $trash")
-          } else {
-            // the reinstall itself races a third writer's publish: rename
-            // onto a directory that (re)appeared MOVES trash INSIDE it
-            // and returns true — the same nesting hazard handled for tmp
-            // below; detect and drop the nested sweep copy
-            val nestedTrash =
-              new org.apache.hadoop.fs.Path(destPath, trash.getName)
-            if (fs.exists(nestedTrash)) fs.delete(nestedTrash, true)
-          }
-        } else fs.delete(trash, true) // verified incomplete AFTER the move
-      }
-      // rename refused: a concurrent publisher/cleaner got there first —
-      // fall through to the exists checks below
-    }
-    if (fs.exists(destPath)) {
-      // another writer won while we were building: do NOT rename — Hadoop
-      // rename onto an existing directory MOVES the source INSIDE it
-      // (returning true), which would nest our temp copy under the
-      // published path forever. Drop ours instead
-      fs.delete(tmp, true)
-      if (!fs.exists(done))
-        sys.error(s"publish of $dest failed: destination exists without " +
-          "_SUCCESS after leftover cleanup")
-      return
-    }
-    if (!fs.rename(tmp, destPath)) {
-      // rename refused: another writer won the race — their copy is
-      // complete (rename is their last step); drop ours
-      fs.delete(tmp, true)
-      if (!fs.exists(done))
-        sys.error(s"publish of $dest failed: rename refused with no winner")
-    } else {
-      // rename "succeeded" but may have LOST anyway: if a winner renamed
-      // between our exists check and ours, Hadoop moved tmp INSIDE their
-      // directory instead of installing it — detect the nesting and
-      // remove our copy (the winner's _SUCCESS is already in place)
-      val nested = new org.apache.hadoop.fs.Path(destPath, tmp.getName)
-      if (fs.exists(nested)) {
-        fs.delete(nested, true)
-        if (!fs.exists(done))
-          sys.error(s"publish of $dest failed: nested rename with no winner")
-      }
-    }
-  }
-
   /** Bloom-indexed point lookup (q383): the OTHER half of data skipping.
     * Zone maps (q329/q382) prune RANGE predicates on clustered columns;
     * they are useless for point lookups on a high-cardinality key stored
@@ -241,20 +131,19 @@ object Lake {
     * group whose bloom says "definitely absent" — no sort, no layout
     * change, false-positive-bounded I/O.
     *
-    * This operator writes a hash-shuffled (deliberately UNSORTED — the
+    * This operator publishes a hash-shuffled (deliberately UNSORTED — the
     * adversarial layout for min/max) bloom-indexed copy of events once
-    * per input fingerprint, then point-looks-up three pinned event_ids
-    * through the scan. The result is layout-invariant (oracle on the raw
-    * table); BloomSkipSpec measures the skip via scan metrics against a
-    * bloom-less control copy of the same rows.
+    * per [[DurableCache]] fingerprint, then point-looks-up three pinned
+    * event_ids through the scan. The result is layout-invariant (oracle on
+    * the raw table); BloomSkipSpec measures the skip via scan metrics
+    * against a bloom-less control copy of the same rows.
     *
     * Scale shape: the lookup reads |matching row groups| ≈ k·(1+fp rate)
     * row groups of the corpus regardless of corpus size — this is the
     * needle-in-100TB access path.
     */
   def bloomPointLookup(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = fingerprintedPath(spark, sfDir, "events", "events_bloom_id16n1m")
-    publishFingerprinted(spark, path)(p =>
+    val path = DurableCache.publish(spark, sfDir, "events_bloom")(p =>
       writeBloomIndexed(graft.core.Tables.events(spark, sfDir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value")), p, "event_id", shuffleCol = "user_id"))
@@ -294,11 +183,11 @@ object Lake {
     * every partition no dim row selects — at 100 TB this is the
     * difference between scanning 30 days and 5.
     *
-    * This operator writes (once per input fingerprint) a day-partitioned
-    * copy of events and a day-dimension table carrying the week-phase
-    * column `wk` = datediff(day, 2024-01-01) mod 7, then joins the fact
-    * to the Monday rows (wk = 0 — 2024-01-01 is a Monday; pure integer
-    * arithmetic, so the oracle agrees without any dow() convention
+    * This operator publishes (once per [[DurableCache]] fingerprint) a
+    * day-partitioned copy of events and a day-dimension table carrying the
+    * week-phase column `wk` = datediff(day, 2024-01-01) mod 7, then joins
+    * the fact to the Monday rows (wk = 0 — 2024-01-01 is a Monday; pure
+    * integer arithmetic, so the oracle agrees without any dow() convention
     * mismatch) and rolls up per day. Result is layout-invariant;
     * DppSpec asserts the `dynamicpruning` partition filter is in the
     * executed plan and that the fact scan surfaces only the Monday
@@ -306,23 +195,27 @@ object Lake {
     * reads everything.
     */
   def dppScan(spark: SparkSession, sfDir: String): DataFrame = {
-    val factPath = fingerprintedPath(spark, sfDir, "events", "events_bydate_v1")
-    val dimPath = fingerprintedPath(spark, sfDir, "events", "events_daydim_w7a240101")
-    // each artifact publishes independently and atomically, so a crash
-    // between the two writes can never pin a half-built pair under the
-    // never-changing fingerprint
+    val (fact, dim) = dppTables(spark, sfDir)
+    dppScanOf(spark.read.parquet(fact), spark.read.parquet(dim))
+  }
+
+  /** The published q384 (fact, day dimension) directories. Each publishes
+    * independently and atomically, so a crash between the two writes can
+    * never pin a half-built pair under one fingerprint.
+    */
+  def dppTables(spark: SparkSession, sfDir: String): (String, String) = {
     def ev = graft.core.Tables.events(spark, sfDir)
       .select(col("event_id"), col("user_id"),
         to_date(col("ts")).as("day"))
-    publishFingerprinted(spark, factPath)(p =>
+    val fact = DurableCache.publish(spark, sfDir, "events_bydate")(p =>
       ev.write.mode("overwrite").partitionBy("day").parquet(p))
-    publishFingerprinted(spark, dimPath)(p =>
+    val dim = DurableCache.publish(spark, sfDir, "events_daydim")(p =>
       ev.select(col("day")).distinct()
         .select(col("day"),
           pmod(datediff(col("day"), lit("2024-01-01").cast("date")), lit(7))
             .as("wk"))
         .coalesce(1).write.mode("overwrite").parquet(p))
-    dppScanOf(spark.read.parquet(factPath), spark.read.parquet(dimPath))
+    (fact, dim)
   }
 
   /** The q384 read side: fact ⋈ Monday-filtered dim on the partition
@@ -338,88 +231,35 @@ object Lake {
 
   /** S2 done right: scan the root and filter on the partition column —
     * Catalyst partition pruning reads only the matching directory, and the
-    * column stays queryable.
+    * column stays queryable. Both columnar formats also push the data
+    * predicates into the reader (LakeSpec and LakeOrcSpec pin
+    * PartitionFilters + PushedFilters on the scan).
+    *
+    * "json" and "csv" are ROW-format interop edges (beyond reference), for
+    * exchange with systems that can't read columnar files, NOT a
+    * performance path: a row format has no column statistics, so the
+    * reader parses every row and data predicates filter AFTER the decode
+    * (no PushedFilters). What DOES survive is directory-level partition
+    * pruning — the partition column lives in the path, so a pruned read
+    * never opens the other partitions' files, at any scale. Their `schema`
+    * is required: inference would scan the data once just to guess, and
+    * guess non-deterministically across drops.
     */
   def readPartition(spark: SparkSession, root: String,
-      partitionCol: String, value: String): DataFrame =
-    spark.read.parquet(root).where(col(partitionCol) === value)
+      partitionCol: String, value: String, format: String = "parquet",
+      schema: Option[StructType] = None): DataFrame = {
+    require(schema.nonEmpty || !Set("json", "csv")(format),
+      s"a $format read needs an explicit schema")
+    schema.fold(spark.read)(spark.read.schema).format(format)
+      .options(formatOptions(format)).load(root)
+      .where(col(partitionCol) === value)
+  }
+
+  private def formatOptions(format: String): Map[String, String] =
+    if (format == "csv") Map("header" -> "true") else Map.empty
 
   /** The reference's path-construction form (kept for parity/tests). */
   def readPartitionByPath(spark: SparkSession, root: String,
       partitionCol: String, value: String): DataFrame =
     spark.read.parquet(s"$root/$partitionCol=$value")
-
-  // — ORC: the second columnar lake format (beyond reference). Spark's
-  // native ORC source ships in the distribution, so interop with
-  // ORC-producing warehouses costs nothing; the same partition layout,
-  // partition pruning, and predicate pushdown contracts as the parquet
-  // side (LakeOrcSpec pins PartitionFilters + PushedFilters on the scan,
-  // exactly as LakeSpec does for parquet). —
-
-  /** Batch ORC write, same partition layout as [[writePartitioned]]. */
-  def writePartitionedOrc(df: DataFrame, path: String,
-      partitionCol: String = "extracted_date"): Unit =
-    df.write.mode("append").partitionBy(partitionCol).orc(path)
-
-  /** Pruned ORC partition read — the [[readPartition]] contract. */
-  def readPartitionOrc(spark: SparkSession, root: String,
-      partitionCol: String, value: String): DataFrame =
-    spark.read.orc(root).where(col(partitionCol) === value)
-
-  /** K2 in ORC: append-mode partitioned ORC streaming sink (the file-sink
-    * transaction log is format-agnostic, so exactly-once holds here too).
-    */
-  def streamingSinkOrc(df: DataFrame, path: String, checkpoint: String,
-      partitionCol: String = "extracted_date"): DataStreamWriter[Row] =
-    df.writeStream
-      .format("orc")
-      .outputMode(OutputMode.Append())
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(partitionCol)
-
-  // — JSON-lines / CSV: ROW-format interop edges of the lake (beyond
-  // reference). These exist for exchange with systems that can't read
-  // columnar files, NOT as a performance path: a row format has no
-  // column statistics, so the reader parses every row and data
-  // predicates filter AFTER the decode (no PushedFilters). What DOES
-  // survive is directory-level partition pruning — the partition column
-  // lives in the path, so a pruned read never opens the other
-  // partitions' files, at any scale. Schemas are always EXPLICIT
-  // (inference would scan the data once just to guess, and guess
-  // non-deterministically across drops). —
-
-  /** Batch JSON-lines write, same partition layout as [[writePartitioned]]. */
-  def writePartitionedJson(df: DataFrame, path: String,
-      partitionCol: String = "extracted_date"): Unit =
-    df.write.mode("append").partitionBy(partitionCol).json(path)
-
-  /** Pruned JSON partition read — explicit schema, no inference pass. */
-  def readPartitionJson(spark: SparkSession, root: String, schema: StructType,
-      partitionCol: String, value: String): DataFrame =
-    spark.read.schema(schema).json(root).where(col(partitionCol) === value)
-
-  /** K2 in JSON-lines: append-mode partitioned streaming sink (the
-    * file-sink transaction log is format-agnostic — exactly-once holds).
-    */
-  def streamingSinkJson(df: DataFrame, path: String, checkpoint: String,
-      partitionCol: String = "extracted_date"): DataStreamWriter[Row] =
-    df.writeStream
-      .format("json")
-      .outputMode(OutputMode.Append())
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .partitionBy(partitionCol)
-
-  /** Batch CSV write with header, same partition layout. */
-  def writePartitionedCsv(df: DataFrame, path: String,
-      partitionCol: String = "extracted_date"): Unit =
-    df.write.mode("append").option("header", "true")
-      .partitionBy(partitionCol).csv(path)
-
-  /** Pruned CSV partition read — explicit schema + header, no inference. */
-  def readPartitionCsv(spark: SparkSession, root: String, schema: StructType,
-      partitionCol: String, value: String): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(root)
-      .where(col(partitionCol) === value)
 }

@@ -938,16 +938,15 @@ object Dedup {
     * computes each document's sketch from its own token array, so there
     * is no token explode, no aggregate and no shuffle — `doc_id` is the
     * documents key, so the per-row result is the per-doc one. A null-text
-    * document is dropped (the DuckDB oracle instead gives it simhash 0;
-    * no testdata drop has one, see COVERAGE.md q26).
+    * document gets simhash 0, as in the DuckDB oracle.
     */
   def simhashDocs(spark: SparkSession, sfDir: String): DataFrame =
     simhashDocsOf(Tables.documents(spark, sfDir))
 
   /** [[simhashDocs]] over an arbitrary (doc_id, text) frame. */
   def simhashDocsOf(documents: DataFrame): DataFrame =
-    documents.where(col("text").isNotNull)
-      .select(col("doc_id"), Hashing.simhash(Text.tokens(col("text"))).as("simhash"))
+    documents.select(col("doc_id"),
+      Hashing.simhash(Text.tokens(col("text"))).as("simhash"))
 
   /** SimHash near-dup pairs with hamming distance ≤ maxHamming, found via
     * the pigeonhole chunk join: the 32-bit hash splits into (maxHamming+1)

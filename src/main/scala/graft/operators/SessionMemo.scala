@@ -162,26 +162,12 @@ private[graft] object SessionMemo {
 
   /** Disk-backed tier over [[apply]] for the EXPENSIVE deterministic memo
     * families (LSH pair lists, decontamination verdicts, truth sets): the
-    * result is published once per (code, data) fingerprint into a
-    * `java.io.tmpdir` parquet cache via the race-safe publish-by-rename of
-    * [[graft.lake.Lake.publishFingerprinted]], and every LATER JVM on the
-    * same host reads the parquet instead of rebuilding (r11 verdict item
-    * 1: the driver bench's first pass re-paid ~300 s of deterministic memo
-    * builds that an earlier JVM on the same host had already done).
-    *
-    * Staleness safety — the cache key covers BOTH inputs of the function:
-    *  - DATA: every file under `sfDir` by (relpath, length, mtime),
-    *    recursively — an in-place rewrite of a leaf file at any nesting
-    *    depth re-keys the cache;
-    *  - ENV: the Spark version and session timezone (envFingerprint);
-    *  - CODE: the compiled classes' own fingerprint — the md5 of each
-    *    .class file's CONTENT (relative path + bytes) under this class's
-    *    code source, or of the jar's bytes when running from a jar.
-    *    Content, not mtime: sbt repackages a fresh run jar per
-    *    invocation, so an mtime key would never hit. Any real code
-    *    change invalidates every durable entry, so a semantic change to
-    *    a memo family can never be masked by a warm cache built by older
-    *    code; a byte-identical repackage keeps hitting.
+    * result is published once per (code, env, data) fingerprint through
+    * [[graft.lake.DurableCache.publish]], and every LATER JVM on the same
+    * host reads the parquet instead of rebuilding (the driver bench's first
+    * pass used to re-pay ~300 s of deterministic memo builds that an
+    * earlier JVM on the same host had already done). The cache key and its
+    * staleness safety are DurableCache's.
     *
     * Schema fidelity: the builder's schema (as-nullable) is stored in a
     * `_graft_schema.json` sidecar and replayed through `read.schema`, so
@@ -194,21 +180,23 @@ private[graft] object SessionMemo {
     * OPT-IN via the `graft.memo.durable` system property: the
     * driver-run mains (GraftSession.driver) enable it; tests and
     * library consumers keep the pure in-memory behavior (plan-shape
-    * sweeps stay deterministic regardless of /tmp state). Failure
-    * semantics (r13 advice 4): a failure while the BUILDER'S OWN PLAN
-    * executes — constructing the frame, or inside the memo write that
-    * runs it (including a rare sink-side failure mid-write, e.g. disk
-    * filling DURING the job) — PROPAGATES, exactly as the in-memory tier
-    * would, because re-running the same failing plan in-memory could only
-    * fail again after doubling the cost. Only failures in the durable
-    * TIER itself — an unwritable/untrusted root (fails before the build
-    * starts), or a post-build publish/read-back error — log and fall back
-    * to the already-built in-memory frame; never to a wrong result.
+    * sweeps stay deterministic regardless of /tmp state), checked before
+    * the file system is touched at all. An untrusted cache root keeps the
+    * frames in memory too. Failure semantics: a failure while the
+    * BUILDER'S OWN PLAN executes — constructing the frame, or inside the
+    * memo write that runs it (including a rare sink-side failure
+    * mid-write, e.g. disk filling DURING the job) — PROPAGATES, exactly as
+    * the in-memory tier would, because re-running the same failing plan
+    * in-memory could only fail again after doubling the cost. Only
+    * failures in the durable TIER itself — an unwritable root (fails
+    * before the build starts), or a post-build publish/read-back error —
+    * log and fall back to the already-built in-memory frame; never to a
+    * wrong result.
     */
   def durable(spark: SparkSession, sfDir: String, key: String)(
       build: => DataFrame): DataFrame =
     if (!sys.props.get("graft.memo.durable").contains("true") ||
-        !memoRootTrusted)
+        !graft.lake.DurableCache.trusted)
       apply(spark, key)(build)
     else apply(spark, key) {
       // evaluated at most once: if the publish or read-back fails AFTER
@@ -218,50 +206,33 @@ private[graft] object SessionMemo {
       var buildStarted = false
       var writeFailed = false
       try {
-        val dest = durableDest(spark, sfDir, key)
-        gcStaleFingerprints(
-          new java.io.File(dest).getParentFile.getName)
-        val destPath = new org.apache.hadoop.fs.Path(dest)
-        val fs = destPath.getFileSystem(spark.sessionState.newHadoopConf())
-        val done = new org.apache.hadoop.fs.Path(destPath, "_SUCCESS")
-        if (!fs.exists(done)) {
-          val t0 = System.nanoTime()
-          graft.lake.Lake.publishFingerprinted(spark, dest) { tmp =>
-            buildStarted = true
-            built = build
-            // the write EXECUTES the builder's plan: a failure here is
-            // (almost always) the plan's own, not the durable tier's —
-            // serving `built` in-memory would just re-execute the same
-            // failing plan in the consumer's action (r13 advice 4). Flag
-            // it so the catch below propagates instead. Trade-off,
-            // documented: a rare sink-side failure mid-write (disk fills
-            // DURING the job — an unwritable tmp fails earlier, before
-            // buildStarted) also propagates rather than rebuilding.
-            try built.write.parquet(tmp)
-            catch { case e: Throwable => writeFailed = true; throw e }
-            val out = fs.create(
-              new org.apache.hadoop.fs.Path(tmp, SchemaSidecar), true)
-            try out.write(allNullable(built.schema).json
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-          }
-          System.err.println(f"[memo] published durable $key in " +
-            f"${(System.nanoTime() - t0) / 1e9}%.2f s")
-        } else System.err.println(s"[memo] durable hit for $key")
-        val sidecar = new org.apache.hadoop.fs.Path(destPath, SchemaSidecar)
-        val reader =
-          if (fs.exists(sidecar)) {
-            val in = fs.open(sidecar)
-            val json = try {
-              val buf = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 64 * 1024, false)
-              buf.toString("UTF-8")
-            } finally in.close()
-            spark.read.schema(
-              org.apache.spark.sql.types.DataType.fromJson(json)
-                .asInstanceOf[org.apache.spark.sql.types.StructType])
-          } else spark.read
-        reader.parquet(dest)
+        val t0 = System.nanoTime()
+        val dest = graft.lake.DurableCache.publish(spark, sfDir, key) { tmp =>
+          buildStarted = true
+          built = build
+          // the write EXECUTES the builder's plan: a failure here is
+          // (almost always) the plan's own, not the durable tier's —
+          // serving `built` in-memory would just re-execute the same
+          // failing plan in the consumer's action. Flag it so the catch
+          // below propagates instead. Trade-off, documented: a rare
+          // sink-side failure mid-write (disk fills DURING the job — an
+          // unwritable root fails earlier, before buildStarted) also
+          // propagates rather than rebuilding.
+          try built.write.parquet(tmp)
+          catch { case e: Throwable => writeFailed = true; throw e }
+          // the cache root is a local directory (DurableCache.trustedRoot)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(tmp, SchemaSidecar), allNullable(built.schema).json)
+        }
+        if (buildStarted) System.err.println(f"[memo] published durable " +
+          f"$key in ${(System.nanoTime() - t0) / 1e9}%.2f s")
+        else System.err.println(s"[memo] durable hit for $key")
+        // every entry under the current code fingerprint has its sidecar; a
+        // missing one is a corrupt entry and takes the fallback below
+        val schema = org.apache.spark.sql.types.DataType.fromJson(
+          java.nio.file.Files.readString(java.nio.file.Paths.get(dest, SchemaSidecar)))
+        spark.read.schema(schema.asInstanceOf[org.apache.spark.sql.types.StructType])
+          .parquet(dest)
       } catch {
         // NonFatal only: OOM/interrupt must propagate, not trigger a
         // silent full rebuild
@@ -271,9 +242,9 @@ private[graft] object SessionMemo {
           // (writeFailed) — the failure is the builder's, not the durable
           // tier's: propagate exactly like the in-memory tier would
           // instead of re-invoking the most expensive builds in the
-          // codebase for a second identical crash (r12 verdict 2c; r13
-          // advice 4 — builds are lazy, so the plan usually blows up
-          // inside write.parquet with built != null)
+          // codebase for a second identical crash (builds are lazy, so
+          // the plan usually blows up inside write.parquet with
+          // built != null)
           if (buildStarted && (built == null || writeFailed)) throw e
           System.err.println(s"[memo] durable tier failed for $key " +
             s"(${e.getClass.getSimpleName}: ${e.getMessage}); " +
@@ -303,273 +274,6 @@ private[graft] object SessionMemo {
           valueContainsNull = true)
       case other => other
     }
-  }
-
-  private def allNullable(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    allNullable(s: org.apache.spark.sql.types.DataType)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-
-  private def md5hex(s: String): String =
-    md5hex(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  private def md5hex(b: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(b).map("%02x".format(_)).mkString
-
-  /** Durable cache root: `GRAFT_MEMO_DIR` when set, else a PER-USER
-    * directory under `java.io.tmpdir` (`graft-memo-<user>`), created with
-    * owner-only permissions where the filesystem supports them. A shared
-    * world-writable root on a multi-user host would let another user
-    * pre-own the directory (silently degrading every publish to
-    * in-memory) or pre-plant a parquet dir + `_SUCCESS` that Verify would
-    * read back as memoized truth (r12 advice 2); scoping by user closes
-    * both, and the env override lets operators place the cache on a
-    * bigger/faster volume.
-    */
-  private[operators] lazy val memoRoot: String =
-    sys.env.getOrElse("GRAFT_MEMO_DIR",
-      s"${sys.props("java.io.tmpdir")}/graft-memo-" +
-        sys.props.getOrElse("user.name", "anon")
-          .replaceAll("[^A-Za-z0-9._-]", "_"))
-
-  /** Whether [[memoRoot]] may be TRUSTED as a cache. The DEFAULT root
-    * lives under a world-writable /tmp, where `createDirectories`
-    * succeeds on a pre-existing dir and a permission tightening is
-    * silently swallowed when we are not the owner — so without a check
-    * another user could pre-create `/tmp/graft-memo-<user>` and have
-    * Verify read back a pre-planted parquet dir + `_SUCCESS` as memoized
-    * truth (r13 advice 1). The default root is therefore only trusted
-    * when it is a real non-symlink directory OWNED by the current user;
-    * on any mismatch the durable tier is DISABLED (loudly). An EXPLICIT
-    * `GRAFT_MEMO_DIR` is the operator's own choice of root (admin-
-    * provisioned volumes are often group-writable or service-account-
-    * owned, and container uids may not name-match `user.name`): the
-    * planted-root attack requires an attacker-creatable PATH, which an
-    * operator-chosen location is not — it is trusted as configured,
-    * beyond being creatable. Filesystems that cannot report ownership
-    * (non-POSIX) keep the tier on: single-user environments here.
-    */
-  private lazy val memoRootTrusted: Boolean =
-    trustedRoot(memoRoot, explicit = sys.env.contains("GRAFT_MEMO_DIR"))
-
-  private[operators] def trustedRoot(root: String,
-      explicit: Boolean = false): Boolean = {
-    val ok = try {
-      val p = java.nio.file.Paths.get(root)
-      val preExisting = java.nio.file.Files.exists(p,
-        java.nio.file.LinkOption.NOFOLLOW_LINKS)
-      java.nio.file.Files.createDirectories(p)
-      if (explicit) {
-        // operator-chosen root: trusted as configured (the planted-root
-        // attack needs an attacker-creatable PATH, which an explicit
-        // location is not) — and best-effort tightened ONLY when this call
-        // just created it (r14 advice 4: operators relied on the
-        // auto-hardening for fresh roots). A PRE-EXISTING explicit root
-        // keeps whatever permissions the operator set: chmod'ing an
-        // owned-but-deliberately-shared volume (a setgid team dir two
-        // service users share) would silently break the second user's
-        // reads, so configured permissions are part of "trusted as
-        // configured". A dir we created this instant cannot be anyone's
-        // deliberate configuration. The symlink re-check below closes the
-        // exists→create race (r15 advice 1): an attacker with a writable
-        // parent could plant a symlink-to-existing-dir BETWEEN the
-        // NOFOLLOW exists() probe and createDirectories() (which
-        // succeeds through such a link), making preExisting=false with p
-        // a symlink — the chmod would then follow the link and strip the
-        // victim target's permissions, the exact vector the non-explicit
-        // branch guards with the same order-matters check.
-        if (!preExisting && !java.nio.file.Files.isSymbolicLink(p))
-          try java.nio.file.Files.setPosixFilePermissions(p,
-            java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
-          catch { case scala.util.control.NonFatal(_) => () } // best-effort
-        true
-      }
-      // ORDER MATTERS: reject a symlinked root BEFORE touching
-      // permissions — a chmod through an attacker-planted symlink would
-      // strip group/other access from whatever victim-owned directory it
-      // points at (the hardening must not be the vector)
-      else if (java.nio.file.Files.isSymbolicLink(p) ||
-          !java.nio.file.Files.isDirectory(p,
-            java.nio.file.LinkOption.NOFOLLOW_LINKS)) false
-      else {
-        val owned =
-          try java.nio.file.Files.getOwner(p,
-              java.nio.file.LinkOption.NOFOLLOW_LINKS).getName ==
-            sys.props.getOrElse("user.name", "")
-          catch { case _: UnsupportedOperationException => true } // no owners
-        if (owned)
-          try java.nio.file.Files.setPosixFilePermissions(p,
-            java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"))
-          catch { case _: UnsupportedOperationException => () } // non-POSIX fs
-        owned
-      }
-    } catch {
-      // creation failed (read-only tmp, quota): nothing to cache into
-      case scala.util.control.NonFatal(_) => false
-    }
-    if (!ok) System.err.println(s"[memo] durable root $root is not a " +
-      "user-owned directory (pre-created by another user, a symlink, or " +
-      "uncreatable) — durable tier DISABLED, using in-memory memo only")
-    ok
-  }
-
-  /** `<memoRoot>/<md5(code+env+data fingerprint)>/<sanitized key>`.
-    * The key tail keeps a readable prefix for humans inspecting the cache
-    * plus a key hash so distinct keys can never collide post-sanitation.
-    */
-  private def durableDest(spark: SparkSession, sfDir: String,
-      key: String): String = {
-    val fp = md5hex(codeFingerprint + "\n" + envFingerprint(spark) + "\n" +
-      dataFingerprint(spark, sfDir))
-    val safe = key.replaceAll("[^A-Za-z0-9._-]", "_").take(48)
-    s"$memoRoot/$fp/$safe-${md5hex(key).take(16)}"
-  }
-
-  /** Results-relevant runtime beyond this project's own classes: the
-    * Spark/dependency stack (a Spark upgrade changes memo build semantics
-    * with the project bytes unchanged — r12 advice 4) and the session
-    * timezone (the one session conf these deterministic builds can
-    * observe; every driver-contract session pins UTC via GraftSession,
-    * but a library consumer's might not).
-    */
-  private def envFingerprint(spark: SparkSession): String =
-    s"spark=${org.apache.spark.SPARK_VERSION};" +
-      s"tz=${spark.conf.get("spark.sql.session.timeZone", "")}"
-
-  /** RECURSIVE (relpath, len, mtime) listing of `sfDir`, hashed. One level
-    * deep was not enough (r12 advice 1): a leaf file of a partitioned
-    * table rewritten in place three levels down changes only its own
-    * mtime, never its ancestors' — the walk must reach every file.
-    * Directories contribute their relpath only (their mtimes churn on
-    * unrelated sibling writes once the files themselves are covered).
-    * Depth-capped at 32 purely as a symlink-cycle guard; testdata is ≤3.
-    */
-  private def dataFingerprint(spark: SparkSession, sfDir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(sfDir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    def walk(dir: org.apache.hadoop.fs.Path, prefix: String, depth: Int): Unit =
-      fs.listStatus(dir).foreach { s =>
-        if (s.isDirectory) {
-          entries += s"$prefix${s.getPath.getName}/:dir"
-          if (depth < 32) walk(s.getPath, s"$prefix${s.getPath.getName}/", depth + 1)
-        } else entries += s"$prefix${s.getPath.getName}:${s.getLen}:${s.getModificationTime}"
-      }
-    walk(p, "", 0)
-    md5hex((p.toString +: entries.sorted.toSeq).mkString("\n"))
-  }
-
-  /** Best-effort retention sweep of STALE fingerprint directories under
-    * [[memoRoot]] (r12 verdict item 3): every recompile abandons its ~30
-    * parquet entries under a now-dead fingerprint, and nothing else ever
-    * deletes them. Keeps the current fingerprint plus the 3 most recently
-    * modified others — enough for the sibling JVMs of one round (Verify
-    * at two gate scales + Bench each fingerprint a different sfDir) and
-    * for one concurrent older-code JVM. Beyond the keep-3 rank, a dir is
-    * only deleted once it has been UNMODIFIED for `minAgeMs` (6 h — about
-    * one round): a durable read-back is lazy, so a concurrent older-code
-    * JVM whose 4th-newest dir was swept mid-round would materialize a
-    * deleted parquet in its consumer's action and FAIL, not fall back
-    * (r13 advice 2) — the age floor keeps every dir a same-round sibling
-    * could still be reading. The residual race (a reader consuming a
-    * >6 h-cold dir exactly as a new JVM sweeps it) is accepted: its
-    * publish mtime bounds how stale its code is, and best-effort GC
-    * must delete SOMETHING eventually. Only names matching the 32-hex
-    * fingerprint shape are ever touched. Once per JVM — the set of live
-    * fingerprints does not change under a running build.
-    */
-  private val gcDone = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private val GcMinAgeMs = 6L * 3600 * 1000
-  private[operators] def gcStaleFingerprints(current: String,
-      force: Boolean = false, root: String = memoRoot,
-      minAgeMs: Long = GcMinAgeMs): Unit =
-    if (gcDone.compareAndSet(false, true) || force) try {
-      val dirs = Option(new java.io.File(root).listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.matches("[0-9a-f]{32}") &&
-          f.getName != current)
-      val cutoff = System.currentTimeMillis() - minAgeMs
-      dirs.sortBy(-_.lastModified()).drop(3)
-        .filter(_.lastModified() < cutoff).foreach { d =>
-        System.err.println(s"[memo] gc stale fingerprint ${d.getName}")
-        deleteRecursively(d)
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[memo] fingerprint gc failed: ${e.getMessage}")
-    }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory && !java.nio.file.Files.isSymbolicLink(f.toPath))
-      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-        .foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Fingerprint of the running code: the CONTENT hash of every .class
-    * file under this class's code source — the same `(relpath, bytes)`
-    * scheme whether the source is a classes DIRECTORY or a JAR (jar entry
-    * names ARE the class files' relative paths), so an sbt-packaged jar
-    * and the classes dir it was packaged from, or two packagings of
-    * byte-identical classes, share one fingerprint. Hashing the raw jar
-    * bytes instead (pre-r14) keyed on the zip's embedded entry TIMESTAMPS,
-    * which sbt re-stamps per packaging — the driver's jar run could never
-    * hit the builder's classes-dir-warmed cache and repaid the full
-    * 149 s prebuild every round (r13 verdict item 1). Content, not mtime,
-    * at the entry level too: a no-op recompile must not invalidate, and a
-    * real code change always changes some class's bytes. Lazy — computed
-    * once per JVM (~3 MB of class files here, tens of ms). An unreadable
-    * code source yields a per-JVM token, which degrades durable to
-    * in-memory semantics rather than risking a stale read — and is
-    * logged, because silently rebuilding every JVM is the regression this
-    * tier fixes.
-    */
-  private lazy val codeFingerprint: String =
-    try {
-      val loc = getClass.getProtectionDomain.getCodeSource.getLocation.toURI
-      val f = new java.io.File(loc)
-      val fp = fingerprintOf(f)
-      System.err.println(s"[memo] code fingerprint $fp from $f")
-      fp
-    } catch {
-      case e: Throwable =>
-        System.err.println("[memo] code fingerprint unavailable " +
-          s"(${e.getClass.getSimpleName}: ${e.getMessage}) — durable cache " +
-          "will not be shared across JVMs")
-        s"nocode-${ProcessHandle.current().pid()}"
-    }
-
-  /** `(relpath, bytes)` content hash of the .class files in a code source
-    * — a jar file or a classes directory. Packaging-stable by
-    * construction: entry order (sorted), zip timestamps, compression
-    * levels, and non-class resources (MANIFEST et al.) do not contribute.
-    */
-  private[operators] def fingerprintOf(f: java.io.File): String = {
-    import scala.jdk.CollectionConverters._
-    val entries =
-      if (f.isFile) {
-        val jar = new java.util.jar.JarFile(f)
-        try jar.entries().asScala
-          .filter(e => !e.isDirectory && e.getName.endsWith(".class"))
-          .map { e =>
-            val in = jar.getInputStream(e)
-            val bytes = try in.readAllBytes() finally in.close()
-            s"${e.getName}:${md5hex(bytes)}"
-          }.toSeq.sorted
-        finally jar.close()
-      } else {
-        val base = f.toPath
-        val walk = java.nio.file.Files.walk(base)
-        try walk.iterator().asScala
-          .filter(_.toString.endsWith(".class"))
-          .map { q =>
-            s"${base.relativize(q)}:" +
-              md5hex(java.nio.file.Files.readAllBytes(q))
-          }.toSeq.sorted
-        finally walk.close()
-      }
-    md5hex(entries.mkString("\n"))
   }
 
   /** The keys currently memoized for `spark` — test-only introspection

@@ -42,9 +42,8 @@ class DppSpec extends SparkTestBase with ScanMeter {
     // whether those two scans collapse to one is an exchange-reuse
     // detail conf drift could change — the contract here is that the
     // FACT side is pruned, not that the metadata-sized dim dedupes.
-    val dimRows = spark.read.parquet(
-      Lake.fingerprintedPath(spark, sf, "events", "events_daydim_w7a240101"))
-      .count()
+    val (factPath, dimPath) = Lake.dppTables(spark, sf)
+    val dimRows = spark.read.parquet(dimPath).count()
     val total = graft.core.Tables.events(spark, sf).count()
     val mondays = graft.core.Tables.events(spark, sf)
       .where(pmod(datediff(to_date(col("ts")),
@@ -57,10 +56,7 @@ class DppSpec extends SparkTestBase with ScanMeter {
     off.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled",
       "false")
     val (controlRows, controlRead) = runAndMeter(Lake.dppScanOf(
-      off.read.parquet(
-        Lake.fingerprintedPath(off, sf, "events", "events_bydate_v1")),
-      off.read.parquet(
-        Lake.fingerprintedPath(off, sf, "events", "events_daydim_w7a240101"))))
+      off.read.parquet(factPath), off.read.parquet(dimPath)))
     assert(controlRows === expected, "DPP must not change content")
     assert(controlRead >= total,
       s"without DPP every partition is read: expected >= $total, got $controlRead")

@@ -17,10 +17,10 @@ class LakeOrcSpec extends SparkTestBase {
       ("u1", 5L, "2024-01-01"), ("u2", 9L, "2024-01-01"),
       ("u3", 2L, "2024-01-02"))
       .toDF("user_id", "n_events", "extracted_date")
-    Lake.writePartitionedOrc(df, dir)
+    Lake.writePartitioned(df, dir, format = "orc")
 
     val filtered = Lake
-      .readPartitionOrc(spark, dir, "extracted_date", "2024-01-01")
+      .readPartition(spark, dir, "extracted_date", "2024-01-01", "orc")
       .where(col("n_events") > 6L)
     assert(filtered.count() === 1)
     assert(filtered.columns.contains("extracted_date"))
@@ -43,8 +43,9 @@ class LakeOrcSpec extends SparkTestBase {
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
     val out = Files.createTempDirectory("graft_orc_sink").toString
     val ckpt = Files.createTempDirectory("graft_orc_ckpt").toString
-    val q = Lake.streamingSinkOrc(
-      input.toDF().toDF("user_id", "extracted_date"), out, ckpt).start()
+    val q = Lake.streamingSink(
+      input.toDF().toDF("user_id", "extracted_date"), out, ckpt,
+      format = "orc").start()
     try {
       input.addData(("u1", "2024-01-01"), ("u2", "2024-01-02"))
       q.processAllAvailable()
@@ -55,8 +56,9 @@ class LakeOrcSpec extends SparkTestBase {
     assert(back.count() === 3)
     assert(back.where(col("extracted_date") === "2024-01-01").count() === 2)
     // restart from the same checkpoint: no duplicates (file-sink log)
-    val q2 = Lake.streamingSinkOrc(
-      input.toDF().toDF("user_id", "extracted_date"), out, ckpt).start()
+    val q2 = Lake.streamingSink(
+      input.toDF().toDF("user_id", "extracted_date"), out, ckpt,
+      format = "orc").start()
     try {
       input.addData(("u4", "2024-01-02"))
       q2.processAllAvailable()

@@ -26,10 +26,11 @@ class LakeTextSpec extends SparkTestBase {
       ("u1", 5L, "2024-01-01"), ("u2", 9L, "2024-01-01"),
       ("u3", 2L, "2024-01-02"))
       .toDF("user_id", "n_events", "extracted_date")
-    Lake.writePartitionedJson(df, dir)
+    Lake.writePartitioned(df, dir, format = "json")
 
     val filtered = Lake
-      .readPartitionJson(spark, dir, schema, "extracted_date", "2024-01-01")
+      .readPartition(spark, dir, "extracted_date", "2024-01-01", "json",
+        Some(schema))
       .where(col("n_events") > 6L)
     assert(filtered.count() === 1)
     val scan = filtered.queryExecution.executedPlan.toString
@@ -40,7 +41,8 @@ class LakeTextSpec extends SparkTestBase {
       === Seq("u2"))
     // the pruned read really skips the other partition's files
     val pruned = Lake
-      .readPartitionJson(spark, dir, schema, "extracted_date", "2024-01-02")
+      .readPartition(spark, dir, "extracted_date", "2024-01-02", "json",
+        Some(schema))
     assert(pruned.select("user_id").collect().map(_.getString(0)).toSeq
       === Seq("u3"))
   }
@@ -53,10 +55,11 @@ class LakeTextSpec extends SparkTestBase {
       ("u1", 5L, "2024-01-01"), ("u2", 9L, "2024-01-01"),
       ("u3", 2L, "2024-01-02"))
       .toDF("user_id", "n_events", "extracted_date")
-    Lake.writePartitionedCsv(df, dir)
+    Lake.writePartitioned(df, dir, format = "csv")
 
     val back = Lake
-      .readPartitionCsv(spark, dir, schema, "extracted_date", "2024-01-01")
+      .readPartition(spark, dir, "extracted_date", "2024-01-01", "csv",
+        Some(schema))
     assert(back.schema("n_events").dataType === LongType)
     assert(back.count() === 2)
     assert(back.where(col("n_events") > 6L).select("user_id")
@@ -76,8 +79,9 @@ class LakeTextSpec extends SparkTestBase {
     val jsonSchema = StructType(Seq(
       StructField("user_id", StringType),
       StructField("extracted_date", StringType)))
-    val q = Lake.streamingSinkJson(
-      input.toDF().toDF("user_id", "extracted_date"), out, ckpt).start()
+    val q = Lake.streamingSink(
+      input.toDF().toDF("user_id", "extracted_date"), out, ckpt,
+      format = "json").start()
     try {
       input.addData(("u1", "2024-01-01"), ("u2", "2024-01-02"))
       q.processAllAvailable()
@@ -88,8 +92,9 @@ class LakeTextSpec extends SparkTestBase {
     assert(readBack().count() === 3)
     assert(readBack().where(col("extracted_date") === "2024-01-01").count() === 2)
     // restart from the same checkpoint: the file-sink log dedups
-    val q2 = Lake.streamingSinkJson(
-      input.toDF().toDF("user_id", "extracted_date"), out, ckpt).start()
+    val q2 = Lake.streamingSink(
+      input.toDF().toDF("user_id", "extracted_date"), out, ckpt,
+      format = "json").start()
     try {
       input.addData(("u4", "2024-01-02"))
       q2.processAllAvailable()

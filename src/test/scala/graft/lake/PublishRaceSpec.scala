@@ -1,15 +1,17 @@
 package graft.lake
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.hadoop.fs.Path
 
-/** The fingerprinted-cache publish must survive losing a race: Hadoop's
+/** [[DurableCache]]'s publish must survive losing a race: Hadoop's
   * `rename(src, existingDir)` MOVES src INSIDE the destination (and
   * returns true), so a loser that renames blindly would nest its temp
   * copy under the published path forever. The loser must instead detect
   * the winner and discard its own build.
   */
-class PublishRaceSpec extends SparkTestBase {
+class PublishRaceSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-pubrace", "graft-pubsolo")
 
   private def fs = new Path("/tmp").getFileSystem(
     spark.sessionState.newHadoopConf())
@@ -21,11 +23,10 @@ class PublishRaceSpec extends SparkTestBase {
   }
 
   test("losing writer discards its temp copy and keeps the winner intact") {
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft-pubrace").toString + "/table"
+    val dest = tempDir("graft-pubrace").toString + "/table"
     // the loser's write closure simulates the interleaving: while it is
     // still "building", the winner publishes a complete copy to dest
-    Lake.publishFingerprinted(spark, dest) { tmp =>
+    DurableCache.publishAtomic(spark, dest) { tmp =>
       writeOne(tmp, "loser")
       writeOne(dest, "winner") // winner lands first (with _SUCCESS)
     }
@@ -45,12 +46,11 @@ class PublishRaceSpec extends SparkTestBase {
   }
 
   test("first writer publishes atomically and a re-publish is a no-op") {
-    val dest = java.nio.file.Files
-      .createTempDirectory("graft-pubsolo").toString + "/table"
-    Lake.publishFingerprinted(spark, dest)(writeOne(_, "only"))
+    val dest = tempDir("graft-pubsolo").toString + "/table"
+    DurableCache.publishAtomic(spark, dest)(writeOne(_, "only"))
     assert(fs.exists(new Path(dest, "_SUCCESS")))
     var ran = false
-    Lake.publishFingerprinted(spark, dest) { _ => ran = true }
+    DurableCache.publishAtomic(spark, dest) { _ => ran = true }
     assert(!ran, "an already-published destination must short-circuit")
     assert(spark.read.parquet(dest).count() === 1L)
   }

@@ -1,9 +1,11 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
+import graft.lake.DurableCache
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Contract of [[SessionMemo.durable]] — the disk-backed memo tier the
   * driver-contract mains enable (r11 verdict item 1):
@@ -19,8 +21,13 @@ import org.apache.spark.sql.types._
   *  - the cache key covers the DATA fingerprint: touching a source file's
   *    mtime re-routes to a fresh cache entry (a rebuild), never a stale
   *    read.
+  * The root, key and GC are [[DurableCache]]'s, pinned here as well.
   */
-class DurableMemoSpec extends SparkTestBase {
+class DurableMemoSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-durable-fix", "graft-memo-gcspec",
+    "graft-memo-gcwin", "graft-fp", "graft-memo-own", "graft-memo-tgt",
+    "graft-memo-file")
 
   /** Flips the GLOBAL `graft.memo.durable` JVM property for the block.
     * ASSUMES suites run sequentially in the forked test JVM (the sbt
@@ -36,7 +43,7 @@ class DurableMemoSpec extends SparkTestBase {
 
   /** Fresh fixture dir with one tiny parquet "table". */
   private def mkFixture(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-durable-fix").toString
+    val dir = tempDir("graft-durable-fix").toString
     spark.range(5).select(col("id"), (col("id") * 2).as("v"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/t.parquet")
     dir
@@ -53,7 +60,7 @@ class DurableMemoSpec extends SparkTestBase {
     val a = SessionMemo.durable(spark, fix, key)(build)
     val b = SessionMemo.durable(spark, fix, key)(build)
     assert(builds == 1 && sortedRows(a) == sortedRows(b))
-    val memoRoot = new java.io.File(SessionMemo.memoRoot)
+    val memoRoot = new java.io.File(DurableCache.root)
     // no entry for THIS key may exist (other suites never enable the prop)
     if (memoRoot.exists()) {
       val walk = java.nio.file.Files.walk(memoRoot.toPath)
@@ -183,7 +190,7 @@ class DurableMemoSpec extends SparkTestBase {
   test("fingerprint gc keeps current + 3 newest, touches only 32-hex dirs") {
     // own root: the test must neither depend on nor delete real cache
     // entries another run of this round may have published
-    val root = java.nio.file.Files.createTempDirectory("graft-memo-gcspec")
+    val root = tempDir("graft-memo-gcspec")
     def mk(name: String, ageMin: Long): java.nio.file.Path = {
       val d = root.resolve(name)
       java.nio.file.Files.createDirectories(d)
@@ -195,17 +202,13 @@ class DurableMemoSpec extends SparkTestBase {
     val current = mk("c" * 32, 0)
     val stale = (1 to 5).map(i => mk(f"${i}%032x", 10L + i)) // 1..5, older = bigger i
     val notFp = mk("not-a-fingerprint-dir", 99) // wrong shape: must survive
-    SessionMemo.gcStaleFingerprints(current.getFileName.toString,
-      force = true, root = root.toString, minAgeMs = 5 * 60000L)
+    DurableCache.gcStaleFingerprints(current.getFileName.toString,
+      root = root.toString, minAgeMs = 5 * 60000L)
     assert(java.nio.file.Files.exists(current), "current fingerprint must survive")
     assert(java.nio.file.Files.exists(notFp), "non-fingerprint dirs are never touched")
     val survivors = stale.filter(java.nio.file.Files.exists(_)).map(_.getFileName.toString)
     assert(survivors == stale.take(3).map(_.getFileName.toString),
       s"expected the 3 newest stale fingerprints to survive, got $survivors")
-    // cleanup what the test created
-    (Seq(current, notFp) ++ stale).foreach { d =>
-      try java.nio.file.Files.deleteIfExists(d) catch { case _: Throwable => () }
-    }
   }
 
   test("gc never deletes a fingerprint modified within the recency window") {
@@ -213,7 +216,7 @@ class DurableMemoSpec extends SparkTestBase {
     // older by rank) must survive the sweep while it could still be read
     // — the durable read-back is lazy, so deletion mid-round would fail
     // its consumer's action rather than fall back
-    val root = java.nio.file.Files.createTempDirectory("graft-memo-gcwin")
+    val root = tempDir("graft-memo-gcwin")
     def mk(name: String, ageMin: Long): java.nio.file.Path = {
       val d = root.resolve(name)
       java.nio.file.Files.createDirectories(d)
@@ -225,15 +228,12 @@ class DurableMemoSpec extends SparkTestBase {
     val current = mk("c" * 32, 0)
     val recent = (1 to 5).map(i => mk(f"${i}%032x", 10L + i)) // all < 6 h old
     val ancient = mk("a" * 32, 10 * 60) // 10 h: beyond rank 3 AND the window
-    SessionMemo.gcStaleFingerprints(current.getFileName.toString,
-      force = true, root = root.toString) // default 6 h window
+    DurableCache.gcStaleFingerprints(current.getFileName.toString,
+      root = root.toString) // default 6 h window
     assert(recent.forall(java.nio.file.Files.exists(_)),
       "recently-modified fingerprints must survive even beyond the keep-3 rank")
     assert(!java.nio.file.Files.exists(ancient),
       "a dir beyond both the rank and the age floor is collected")
-    (Seq(current, ancient) ++ recent).foreach { d =>
-      try java.nio.file.Files.deleteIfExists(d) catch { case _: Throwable => () }
-    }
   }
 
   /** Packs `classes` (name → bytes) into a jar with the given fixed entry
@@ -241,7 +241,7 @@ class DurableMemoSpec extends SparkTestBase {
     */
   private def mkJar(classes: Seq[(String, Array[Byte])], stampMs: Long,
       extra: Seq[(String, Array[Byte])] = Seq.empty): java.io.File = {
-    val f = java.nio.file.Files.createTempFile("graft-fp", ".jar").toFile
+    val f = tempFile("graft-fp", ".jar").toFile
     val out = new java.util.jar.JarOutputStream(
       new java.io.FileOutputStream(f))
     try (classes ++ extra).foreach { case (name, bytes) =>
@@ -265,21 +265,46 @@ class DurableMemoSpec extends SparkTestBase {
     val jar1 = mkJar(Seq(a, b), stampMs = 1000000000000L)
     val jar2 = mkJar(Seq(b, a), stampMs = 1700000000000L, // reordered + restamped
       extra = Seq("META-INF/MANIFEST.MF" -> "Main-Class: X\n".getBytes))
-    assert(SessionMemo.fingerprintOf(jar1) == SessionMemo.fingerprintOf(jar2),
+    assert(DurableCache.fingerprintOf(jar1) == DurableCache.fingerprintOf(jar2),
       "identical class bytes must fingerprint equal across packagings")
-    val dir = java.nio.file.Files.createTempDirectory("graft-fp-dir")
+    val dir = tempDir("graft-fp-dir")
     Seq(a, b).foreach { case (name, bytes) =>
       val p = dir.resolve(name)
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p, bytes)
     }
-    assert(SessionMemo.fingerprintOf(dir.toFile) ==
-      SessionMemo.fingerprintOf(jar1),
+    assert(DurableCache.fingerprintOf(dir.toFile) ==
+      DurableCache.fingerprintOf(jar1),
       "a jar and the classes dir it was packed from must fingerprint equal")
     val jar3 = mkJar(Seq(a, "graft/sub/Beta.class" -> Array[Byte](5, 6, 8)),
       stampMs = 1000000000000L)
-    assert(SessionMemo.fingerprintOf(jar1) != SessionMemo.fingerprintOf(jar3),
+    assert(DurableCache.fingerprintOf(jar1) != DurableCache.fingerprintOf(jar3),
       "a real byte change in any class must re-key")
+  }
+
+  test("an entry without its schema sidecar is rebuilt, never read back") {
+    withDurable {
+      val fix = mkFixture()
+      var builds = 0
+      def build: DataFrame = { builds += 1; spark.range(4).toDF("n") }
+      val key = s"durableNoSidecarSpec|$fix"
+      val first = sortedRows(SessionMemo.durable(spark, fix, key)(build))
+      SessionMemo.invalidate(spark)
+      // the entry is `<root>/<fingerprint>/<key prefix>-<md5(key) prefix>`
+      val keyHash = java.security.MessageDigest.getInstance("MD5")
+        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(DurableCache.root))
+      val sidecars =
+        try walk.iterator().asScala.filter(p =>
+          p.getParent.getFileName.toString.endsWith(s"-$keyHash") &&
+            p.getFileName.toString == "_graft_schema.json").toList
+        finally walk.close()
+      assert(sidecars.size === 1, sidecars)
+      java.nio.file.Files.delete(sidecars.head)
+      assert(sortedRows(SessionMemo.durable(spark, fix, key)(build)) === first)
+      assert(builds === 2, "a corrupt entry must fall back to a build")
+      SessionMemo.invalidate(spark)
+    }
   }
 
   test("a builder whose plan fails at EXECUTION propagates, not double-runs") {
@@ -305,10 +330,10 @@ class DurableMemoSpec extends SparkTestBase {
   test("a symlinked or uncreatable durable root is not trusted; own dir is") {
     // r13 advice 1 (the testable half — a foreign-OWNED dir needs a second
     // uid): the trust check must reject the shapes an attacker can plant
-    val own = java.nio.file.Files.createTempDirectory("graft-memo-own")
-    assert(SessionMemo.trustedRoot(own.toString),
+    val own = tempDir("graft-memo-own")
+    assert(DurableCache.trustedRoot(own.toString),
       "a directory we just created and own is trusted")
-    val target = java.nio.file.Files.createTempDirectory("graft-memo-tgt")
+    val target = tempDir("graft-memo-tgt")
     // the check must not CHMOD through the link either — a symlinked
     // default root redirecting a chmod 700 onto a victim-owned shared
     // dir would make the hardening itself the vector (r14 review)
@@ -317,19 +342,19 @@ class DurableMemoSpec extends SparkTestBase {
     java.nio.file.Files.setPosixFilePermissions(target, shared)
     val link = java.nio.file.Paths.get(own.toString + "-link")
     java.nio.file.Files.createSymbolicLink(link, target)
-    assert(!SessionMemo.trustedRoot(link.toString),
+    assert(!DurableCache.trustedRoot(link.toString),
       "a symlink root is never trusted (it may point into foreign space)")
     assert(java.nio.file.Files.getPosixFilePermissions(target) == shared,
       "rejecting a symlink root must not alter the target's permissions")
-    val file = java.nio.file.Files.createTempFile("graft-memo-file", "")
-    assert(!SessionMemo.trustedRoot(file.toString),
+    val file = tempFile("graft-memo-file", "")
+    assert(!DurableCache.trustedRoot(file.toString),
       "a non-directory root is never trusted")
     // an EXPLICIT GRAFT_MEMO_DIR is the operator's choice: trusted as
     // configured (admin-provisioned volumes are often not name-owned by
     // the running user), beyond being creatable
-    assert(SessionMemo.trustedRoot(link.toString, explicit = true),
+    assert(DurableCache.trustedRoot(link.toString, explicit = true),
       "an operator-configured root is trusted as configured")
-    assert(!SessionMemo.trustedRoot(
+    assert(!DurableCache.trustedRoot(
       java.nio.file.Paths.get(file.toString, "sub").toString, explicit = true),
       "an uncreatable explicit root still fails (nothing to cache into)")
     // trusting the explicit symlink root above must not have chmod'd its
@@ -339,22 +364,20 @@ class DurableMemoSpec extends SparkTestBase {
       "an explicit symlink root must not redirect the tightening")
     // a PRE-EXISTING explicit root keeps its operator-configured
     // permissions (a deliberately shared team volume must stay shared)...
-    val ownExp = java.nio.file.Files.createTempDirectory("graft-memo-ownexp")
+    val ownExp = tempDir("graft-memo-ownexp")
     java.nio.file.Files.setPosixFilePermissions(ownExp, shared)
-    assert(SessionMemo.trustedRoot(ownExp.toString, explicit = true),
+    assert(DurableCache.trustedRoot(ownExp.toString, explicit = true),
       "an owned explicit root is trusted")
     assert(java.nio.file.Files.getPosixFilePermissions(ownExp) == shared,
       "a pre-existing explicit root keeps its configured permissions")
     // ...while an explicit root CREATED by the check itself (no deliberate
     // configuration can exist for it) gets the best-effort auto-tightening
     val freshExp = java.nio.file.Paths.get(ownExp.toString, "fresh-sub")
-    assert(SessionMemo.trustedRoot(freshExp.toString, explicit = true),
+    assert(DurableCache.trustedRoot(freshExp.toString, explicit = true),
       "a creatable explicit root is trusted")
     assert(java.nio.file.Files.getPosixFilePermissions(freshExp) ==
       java.nio.file.attribute.PosixFilePermissions.fromString("rwx------"),
       "a just-created explicit root is auto-tightened (r14 advice 4)")
-    Seq(freshExp, link, file, target, own, ownExp).foreach { p =>
-      try java.nio.file.Files.deleteIfExists(p) catch { case _: Throwable => () }
-    }
+    java.nio.file.Files.delete(link) // the rest are tempDir/tempFile's
   }
 }

@@ -65,12 +65,14 @@ class SimhashKernelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       5L -> "a b",                         // a vote sums to 0 on every differing bit
       6L -> "rep rep rep other",           // repeats outvote the odd token
       7L -> "héllo wörld 日本語 🙂 naïve",   // multi-byte UTF-8
-      8L -> null                           // dropped by both forms
+      8L -> null                           // the old form drops it
     ).toDF("doc_id", "text")
-    assertSameAsOld(docs)
+    assertSameAsOld(docs.where(col("text").isNotNull))
     val got = Dedup.simhashDocsOf(docs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got.keySet === (1L to 7L).toSet)
+    assert(got.keySet === (1L to 8L).toSet)
+    assert(got(8L) === 0L)                      // the oracle's simhash
+    assert(oldSimhashDocsOf(docs).where(col("doc_id") === 8L).isEmpty)
     assert(got(1L) === h32(""))
     assert(got(3L) === h32("single"))
     assert(got(4L) === h32("w"))
