@@ -92,8 +92,7 @@ object SparkEntry {
     "q64_scalar_subquery" -> graft.analytics.Sql.scalarSubquerySql _,
     // the RangeJoinRewrite optimizer rule, exercised through the oracle
     // gate: same semantics as q43 but written as the naive interval join
-    // and planned by the rule (derived session, built once per override
-    // set: a new session per call would recompile its generated code)
+    // and planned by the rule
     "q65_range_join_rewrite" -> TemporalJoins.shipmentsNearOrderRewritten _,
     // trained-codebook IVF assignment: Lloyd's output pinned as literals
     // (TrainedCodebook); deterministic argmax, oracle renders the same
@@ -112,9 +111,9 @@ object SparkEntry {
     // the star-rewrite components resolver, against q50's exact oracle
     "q72_dedup_components_star" -> ((s: SparkSession, d: String) => graft.operators.Curation.dedupComponentsStar(s, d)),
     // exact Jaccard join DECLARED as a theta join, PLANNED by the
-    // SimilarityJoinRewrite optimizer rule (derived session, built once
-    // per override set: a new session per call would recompile its
-    // generated code)
+    // SimilarityJoinRewrite optimizer rule (derived session for its Spark
+    // conf, built once per override set: a new session per call would
+    // recompile its generated code)
     "q75_sim_join_rewrite" -> ((s: SparkSession, d: String) => Dedup.jaccardPairsRewrite(s, d)),
     // typed PII redaction + audit counts (map-side regexp chain)
     "q76_pii_scrub" -> ((s: SparkSession, d: String) => TextAnalytics.piiScrub(s, d)),

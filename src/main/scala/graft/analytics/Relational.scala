@@ -133,20 +133,12 @@ object Relational {
       .where(col("rank") <= 3)
   }
 
-  /** Distinct aggregation: exact countDistinct (reference A4) per group.
-    * At 100 TB the approx variant (HLL++) is the scale path — exposed as
-    * [[distinctPartsApprox]], benchmarked but oracle-checked rows-only.
-    */
+  /** Distinct aggregation: exact countDistinct (reference A4) per group. */
   def distinctParts(spark: SparkSession, sfDir: String): DataFrame =
     Tables.lineitem(spark, sfDir)
       .groupBy(col("l_returnflag"))
       .agg(countDistinct(col("l_partkey")).as("distinct_parts"),
         countDistinct(col("l_suppkey")).as("distinct_supps"))
-
-  def distinctPartsApprox(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.lineitem(spark, sfDir)
-      .groupBy(col("l_returnflag"))
-      .agg(approx_count_distinct(col("l_partkey"), 0.01).as("approx_parts"))
 
   /** Exact interpolated percentiles per group (median + tails), computed
     * over the VALUE GRAIN instead of Spark's `percentile` aggregate

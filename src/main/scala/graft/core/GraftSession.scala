@@ -18,8 +18,9 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Shared config applied to every session (local dev, Verify, Bench).
-    * Registers [[graft.plans.GraftExtensions]]: the graft_cosine SQL
-    * function and the (off-by-default) approx-distinct rewrite rule.
+    * Registers [[graft.plans.GraftExtensions]]: the graft_cosine and
+    * graft_jaccard SQL functions and the exact range, Jaccard and Hamming
+    * join rewrite rules, which fire wherever their pattern matches.
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new graft.plans.GraftExtensions)
@@ -46,8 +47,8 @@ object GraftSession {
   /** The child session of `spark` with `overrides` set on its runtime conf,
     * built once per (parent, override map) and never changed afterwards.
     *
-    * Query code that needs different confs (a rule flag read at
-    * optimization time, a broadcast threshold) gets them here rather than
+    * Query code that needs different Spark confs (an excluded optimizer
+    * rule, a broadcast threshold) gets them here rather than
     * by `spark.newSession()` per call: Spark caches generated code per
     * session class loader and every new session gets its own, so each
     * call would recompile all of its whole-stage generated code. The

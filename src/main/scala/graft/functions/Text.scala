@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ArrayUnion, Cast, Divide, Expression, Size}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftBridge
+import org.apache.spark.sql.types.DoubleType
 
 /** Text-analysis column functions for large-scale corpus pipelines:
   * tokenization, word-shingling, language-ID heuristic, quality scoring,
@@ -40,11 +43,23 @@ object Text {
     * (excluded by any threshold comparison). This EXACT composition is what
     * [[graft.plans.SimilarityJoinRewrite]] pattern-matches in a join
     * condition, so `a.join(b, jaccardSim(...) >= t)` plans as a bucketed
-    * equality join when the rule is enabled — keep threshold predicates on
-    * this function rather than a hand-rolled variant.
+    * equality join — keep threshold predicates on this function rather
+    * than a hand-rolled variant.
     */
   def jaccardSim(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
+    GraftBridge.column(jaccard(GraftBridge.expression(a), GraftBridge.expression(b)))
+
+  /** The expression behind [[jaccardSim]] and the SQL `graft_jaccard`.
+    * MODERN size-of-null semantics are baked into both sizes whatever the
+    * session's legacy conf: a null array scores NULL, where legacy
+    * `size(NULL) = -1` would score it -1/-1 = 1.0 against everything. That
+    * is both the saner score and what keeps the rewrite sound on nullable
+    * array columns.
+    */
+  private[graft] def jaccard(a: Expression, b: Expression): Expression =
+    Divide(
+      Cast(Size(ArrayIntersect(a, b), legacySizeOfNull = false), DoubleType),
+      Cast(Size(ArrayUnion(a, b), legacySizeOfNull = false), DoubleType))
 
   /** PII patterns for [[redactPii]]/[[piiCounts]], applied in declaration
     * order (email before IP before phone before bare digit runs — later

@@ -56,11 +56,12 @@ object DurableCache {
     * close both, and the env override lets operators place the cache on a
     * bigger/faster volume.
     */
-  private lazy val configured: String =
-    sys.env.getOrElse("GRAFT_MEMO_DIR",
-      s"${sys.props("java.io.tmpdir")}/graft-memo-" +
-        sys.props.getOrElse("user.name", "anon")
-          .replaceAll("[^A-Za-z0-9._-]", "_"))
+  private lazy val configured: String = sys.env.getOrElse("GRAFT_MEMO_DIR", defaultRoot)
+
+  /** The per-user root used when `GRAFT_MEMO_DIR` is unset. */
+  private[graft] def defaultRoot: String =
+    s"${sys.props("java.io.tmpdir")}/graft-memo-" +
+      sys.props.getOrElse("user.name", "anon").replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** Where [[publish]] lands: the configured root when trusted, else a
     * private per-JVM directory.

@@ -263,11 +263,10 @@ object Dedup {
     * Same truth as [[jaccardPairsPrefix]] (no hot-shingle cap, nothing
     * dropped), demonstrating the planner-rule form of the similarity join:
     * the query says WHAT (a Jaccard threshold), the rule picks the
-    * scale-safe HOW. The rule reads its conf at optimization time, so the
-    * entry runs on a derived session, built once per override set
-    * ([[GraftSession.derived]]: extensions inherited, runtime conf
-    * isolated), exactly like the range-join entry; a new session per call
-    * would recompile all its generated code.
+    * scale-safe HOW. The entry runs on a derived session, built once per
+    * override set ([[GraftSession.derived]]: extensions inherited, runtime
+    * conf isolated), for the one Spark conf in [[SimilarityJoinRewriteConfs]];
+    * a new session per call would recompile all its generated code.
     *
     * Scope note: the rule itself PREFIX-FILTERS (AllPairs lemma over the
     * sorted-distinct arrays — see the rule's scaladoc), so its candidate
@@ -302,14 +301,6 @@ object Dedup {
     * session before any DataFrame of it is built.
     */
   private[graft] val SimilarityJoinRewriteConfs = Map(
-    "spark.graft.similarityJoinRewrite" -> "true",
-    // modern size-of-null semantics — the rule (correctly) refuses to
-    // rewrite under legacy size(NULL) = -1, where a null array would score
-    // 1.0 against everything. Shingle arrays are never null at runtime but
-    // their static nullability is conservative, so the conf is what makes
-    // the rewrite provably sound here. It must hold BEFORE the DataFrame
-    // is built: analysis bakes the flag into the Size nodes.
-    "spark.sql.legacy.sizeOfNull" -> "false",
     // InferFiltersFromGenerate + predicate pushdown is PATHOLOGICAL here:
     // Catalyst infers `size(pfx) > 0 AND isnotnull(pfx)` from the rule's
     // prefix explode, and pushdown substitutes the prefix alias through
@@ -367,23 +358,10 @@ object Dedup {
     * popcount re-check). Same rows as the hand-written [[simhashPairs]],
     * demonstrating the planner-rule form of the hamming join: the query
     * says WHAT (a distance threshold), the rule picks the scale-safe HOW.
-    * The rule reads its conf at optimization time, so the entry runs on a
-    * derived session, built once per override set
-    * ([[GraftSession.derived]]: extensions inherited, runtime conf
-    * isolated), exactly like the range-join and similarity-join entries;
-    * a new session per call would recompile all its generated code.
+    * It runs on the caller's session: the rule fires on the plan's shape.
     */
   def simhashPairsPlanned(spark: SparkSession, sfDir: String,
-      maxHamming: Int = 3): DataFrame =
-    simhashPairsPlannedOn(GraftSession.derived(spark, HammingJoinRewriteConfs),
-      sfDir, maxHamming)
-
-  /** The confs [[simhashPairsPlanned]] runs under. */
-  private[graft] val HammingJoinRewriteConfs = Map("spark.graft.hammingJoinRewrite" -> "true")
-
-  /** [[simhashPairsPlanned]]'s query on a session carrying [[HammingJoinRewriteConfs]]. */
-  private[graft] def simhashPairsPlannedOn(s: SparkSession, sfDir: String,
-      maxHamming: Int): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     // ship the sketch as a 31-bit INT: INT so the rule chunks the real
     // sketch width (on a zero-stuffed LONG the always-zero high chunks
     // would agree for every pair — correct, but all-pairs), and MASKED
@@ -391,7 +369,7 @@ object Dedup {
     // (bit_count of an INT xor with the top bit set counts 32 extra sign
     // bits — 35, not 3); masking keeps every xor non-negative, so the
     // popcount is the true sketch distance
-    val docs = simhashDocs(s, sfDir)
+    val docs = simhashDocs(spark, sfDir)
       .select(col("doc_id"),
         col("simhash").bitwiseAND(lit(0x7FFFFFFFL)).cast("int").as("h"))
     val a = docs.select(col("doc_id").as("doc1"), col("h").as("h1"))

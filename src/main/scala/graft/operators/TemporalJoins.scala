@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.{GraftSession, Tables}
+import graft.core.Tables
 
 /** Temporal join operators Spark lacks as built-ins, expressed with
   * shuffle-friendly plans instead of theta joins:
@@ -110,31 +110,16 @@ object TemporalJoins {
     * the bucketed equality-join shape at optimization time. This is the
     * production form: the user states the interval predicate, the rule
     * picks the scalable plan (without it, Catalyst's only option is an
-    * O(n·m) BroadcastNestedLoopJoin).
-    *
-    * Runs on a derived session, built once per override set
-    * ([[GraftSession.derived]]), so enabling the rule here cannot leak
-    * into other queries of the caller's session — the rule reads its conf
-    * at optimization time, which for a write happens at the write, not
-    * when this DataFrame is built. One session per override set, not one
-    * per call, because a new session recompiles all its generated code.
+    * O(n·m) BroadcastNestedLoopJoin). It runs on the caller's session:
+    * the rule fires on the plan's shape, with its one-day buckets.
     */
-  def shipmentsNearOrderRewritten(spark: SparkSession, sfDir: String): DataFrame =
-    shipmentsNearOrderRewrittenOn(GraftSession.derived(spark, RangeJoinRewriteConfs), sfDir)
-
-  /** The confs [[shipmentsNearOrderRewritten]] runs under. */
-  private[graft] val RangeJoinRewriteConfs = Map(
-    "spark.graft.rangeJoinRewrite" -> "true",
-    "spark.graft.rangeJoin.bucketSeconds" -> "86400")
-
-  /** [[shipmentsNearOrderRewritten]]'s query on a session carrying [[RangeJoinRewriteConfs]]. */
-  private[graft] def shipmentsNearOrderRewrittenOn(s: SparkSession, sfDir: String): DataFrame = {
-    val li = Tables.lineitem(s, sfDir)
+  def shipmentsNearOrderRewritten(spark: SparkSession, sfDir: String): DataFrame = {
+    val li = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_shipdate")).agg(count(lit(1)).as("__cnt"))
     // keep `hi` the same timestamp flavor (NTZ) as l_shipdate: the rule
     // conservatively requires type-aligned bounds — a mixed tz/ntz pair
     // would make Spark cast one side, and cross-zone bucketing is unsound
-    val o = Tables.orders(s, sfDir)
+    val o = Tables.orders(spark, sfDir)
       .select(col("o_orderkey"), col("o_orderdate"),
         (col("o_orderdate") + expr("INTERVAL 1 DAY")).as("__hi"))
     li.join(o,

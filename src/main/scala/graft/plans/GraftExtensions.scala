@@ -3,10 +3,7 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
-import graft.functions.CosineSimilarity
+import graft.functions.{CosineSimilarity, Text}
 
 /** Engine extensions, registered via
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or conf
@@ -14,35 +11,29 @@ import graft.functions.CosineSimilarity
   *
   *  1. SQL function `graft_cosine(a, b)` — the codegen'd cosine expression
   *     usable from SQL text, not just the Column API.
-  *  2. [[ApproxDistinctRewrite]] — optional optimizer rule that rewrites
-  *     exact `count(DISTINCT x)` to HyperLogLog++ when
-  *     `spark.graft.approxDistinct` is true: the 100 TB escape hatch for
-  *     reference-A4-style exact distincts (SURVEY §7.3), applied globally
-  *     without touching query code. Off by default — correctness gates run
-  *     exact.
-  *  3. [[RangeJoinRewrite]] — optional optimizer rule
-  *     (`spark.graft.rangeJoinRewrite=true`) that turns pure interval
+  *  2. SQL function `graft_jaccard(a, b)` — the `Text.jaccardSim`
+  *     composition usable from SQL text.
+  *  3. [[RangeJoinRewrite]] — optimizer rule that turns pure interval
   *     inner joins into bucketed equality joins + exact filter, replacing
   *     the O(n·m) BroadcastNestedLoopJoin Catalyst would otherwise plan.
-  *     Semantics-preserving, so it is safe as an optimizer rule.
-  *  4. [[SimilarityJoinRewrite]] — optional optimizer rule
-  *     (`spark.graft.similarityJoinRewrite=true`) that turns an inner
+  *  4. [[SimilarityJoinRewrite]] — optimizer rule that turns an inner
   *     theta join on a set-Jaccard threshold (the `Text.jaccardSim`
   *     composition) into an exploded-element equality join + meet-once
-  *     filter + exact re-check. Also semantics-preserving (exact, not
-  *     LSH), hence safe as a rule.
-  *  5. [[HammingJoinRewrite]] — optional optimizer rule
-  *     (`spark.graft.hammingJoinRewrite=true`) that turns an inner theta
+  *     filter + exact re-check (exact, not LSH).
+  *  5. [[HammingJoinRewrite]] — optimizer rule that turns an inner theta
   *     join on `bit_count(a ^ b) <= d` into the pigeonhole chunk
   *     equality join + meet-once filter + exact re-check — the q27
-  *     simhash candidate join, found by the planner. Semantics-
-  *     preserving, hence safe as a rule.
+  *     simhash candidate join, found by the planner.
+  *
+  * The three rules preserve semantics, so, like Catalyst's own rules, they
+  * fire wherever their pattern matches; no conf turns them on or off.
+  * Tests that need the nested-loop control exclude one through
+  * `spark.sql.optimizer.excludedRules` and its `ruleName`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction(GraftExtensions.cosineFunction)
     e.injectFunction(GraftExtensions.jaccardFunction)
-    e.injectOptimizerRule(_ => ApproxDistinctRewrite)
     e.injectOptimizerRule(_ => RangeJoinRewrite)
     e.injectOptimizerRule(_ => SimilarityJoinRewrite)
     e.injectOptimizerRule(_ => HammingJoinRewrite)
@@ -55,22 +46,18 @@ object GraftExtensions {
     new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
     (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)))
 
-  /** SQL-text set-Jaccard: `graft_jaccard(a, b)` expands to the exact
-    * size(intersect)/size(union) composition [[SimilarityJoinRewrite]]
-    * pattern-matches — so `A JOIN B ON graft_jaccard(a, b) >= t` in SQL
-    * plans as the bucketed equality join when the rule is on. Built with
-    * MODERN size-of-null semantics baked in (null array → NULL score,
-    * excluded by any threshold) regardless of the session's legacy conf:
-    * that is both the saner scoring and what keeps the rewrite eligible
-    * for nullable array columns.
+  /** SQL-text set-Jaccard: `graft_jaccard(a, b)` expands to
+    * [[graft.functions.Text.jaccard]], the exact size(intersect)/size(union)
+    * composition [[SimilarityJoinRewrite]] pattern-matches — so
+    * `A JOIN B ON graft_jaccard(a, b) >= t` in SQL plans as the bucketed
+    * equality join, with the same modern size-of-null semantics as
+    * `Text.jaccardSim`.
     */
   val jaccardFunction: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_jaccard"),
     new ExpressionInfo(classOf[org.apache.spark.sql.catalyst.expressions.Divide].getName,
       "graft_jaccard"),
     (children: Seq[Expression]) => {
-      import org.apache.spark.sql.catalyst.expressions.{ArrayIntersect, ArrayUnion, Cast, Divide, Size}
-      import org.apache.spark.sql.types.DoubleType
       // arity errors must surface as AnalysisException (the contract every
       // built-in honors and query tooling catches), not a raw
       // IllegalArgumentException from require
@@ -79,28 +66,6 @@ object GraftExtensions {
         Map("functionName" -> "`graft_jaccard`", "expectedNum" -> "2",
           "actualNum" -> children.size.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))
-      val Seq(a, b) = children
-      Divide(
-        Cast(Size(ArrayIntersect(a, b), legacySizeOfNull = false), DoubleType),
-        Cast(Size(ArrayUnion(a, b), legacySizeOfNull = false), DoubleType))
+      Text.jaccard(children(0), children(1))
     })
-}
-
-/** Rewrite exact distinct counts to approx_count_distinct (HLL++, rsd 5%)
-  * when `spark.graft.approxDistinct=true`. Only `Count(distinct)` is
-  * rewritten; other distinct aggregates are left untouched.
-  */
-object ApproxDistinctRewrite extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString("spark.graft.approxDistinct", "false").toBoolean) plan
-    else plan.transformUp {
-      case a: Aggregate =>
-        a.transformExpressions {
-          case ae @ AggregateExpression(Count(children), _, true, _, _) if children.size == 1 =>
-            ae.copy(
-              aggregateFunction = HyperLogLogPlusPlus(children.head),
-              isDistinct = false)
-        }
-    }
-  }
 }

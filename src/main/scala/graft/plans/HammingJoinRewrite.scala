@@ -58,22 +58,14 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * cast to INT first. Declines when any equality conjunct between the sides
   * already exists — Spark then has a hash key, and the rewritten join's
   * own idx = idx conjunct makes a second pass decline (idempotency).
-  *
-  * Fires only when `spark.graft.hammingJoinRewrite=true` (set on the
-  * session BEFORE the action — optimizer confs are read at optimization
-  * time).
   */
 object HammingJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val enabledKey = "spark.graft.hammingJoinRewrite"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(enabledKey, "false").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(_, _, Inner, Some(cond), _) =>
         rewrite(j, cond).getOrElse(j)
     }
-  }
 
   private def stripCast(e: Expression): Expression = e match {
     case Cast(c, _, _, _) => stripCast(c)

@@ -30,23 +30,27 @@ import org.apache.spark.sql.types._
   * (e.g. Spark inserted a tz/ntz cast on one conjunct because the bound
   * types differ), the rule declines — bucketing across timezone
   * reinterpretations is unsound, and soundness beats coverage in an
-  * optimizer rule. Align the bound types in the query to enable it. Fires only when
-  * `spark.graft.rangeJoinRewrite=true`; bucket width (seconds / integral
-  * units) from `spark.graft.rangeJoin.bucketSeconds`, default 86400 —
-  * pick ≈ the window length so each probe touches ~2 buckets
-  * (TemporalJoins.bucketedRangeJoin is the manual form of the same shape).
+  * optimizer rule. Align the bound types in the query to enable it.
+  * Buckets are one day wide (86400 seconds, or integral units), and an
+  * interval may span at most 100000 of them.
   * Idempotent: the rewritten join's condition is a plain equality, which
   * the eligibility check rejects.
+  *
+  * Trade-off of firing on plan shape alone: every eligible interval join
+  * is bucketed by day, and one whose interval spans more than 100000 days
+  * fails loudly instead of running as a nested loop. Such a join should
+  * pick its own bucket width with [[graft.operators.TemporalJoins.bucketedRangeJoin]],
+  * the manual form of the same shape.
   */
 object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val enabledKey = "spark.graft.rangeJoinRewrite"
-  private val bucketKey = "spark.graft.rangeJoin.bucketSeconds"
-  private val maxBucketsKey = "spark.graft.rangeJoin.maxBucketsPerInterval"
+  /** Bucket width: one day in seconds (or integral units). */
+  private val BucketWidth = 86400L
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(enabledKey, "false").toBoolean) return plan
-    val bucketWidth = conf.getConfString(bucketKey, "86400").toLong
+  /** The most buckets one interval may explode into. */
+  private val MaxBucketsPerInterval = 100000L
+
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       // probe (bounded) side = LEFT = the non-exploded side, so Inner,
       // LeftOuter, LeftSemi and LeftAnti are sound: every true pair meets
@@ -55,9 +59,8 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
       // rewritable this way — the exploded right copies would each
       // null-extend, duplicating unmatched right rows.
       case j @ Join(_, _, Inner | LeftOuter | LeftSemi | LeftAnti, Some(cond), _) =>
-        rewrite(j, cond, bucketWidth).getOrElse(j)
+        rewrite(j, cond).getOrElse(j)
     }
-  }
 
   /** Seconds-resolution long view of a timestamp/integral expression.
     * Casts built inside an OPTIMIZER rule must carry a timezone
@@ -89,12 +92,11 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     case _ => false
   }
 
-  private def bucketOf(e: Expression, width: Long): Expression =
+  private def bucketOf(e: Expression): Expression =
     Cast(Floor(Divide(Cast(asLong(e), DoubleType),
-      Literal(width.toDouble, DoubleType))), LongType)
+      Literal(BucketWidth.toDouble, DoubleType))), LongType)
 
-  private def rewrite(j: Join, cond: Expression,
-      width: Long): Option[LogicalPlan] = {
+  private def rewrite(j: Join, cond: Expression): Option[LogicalPlan] = {
     val left = j.left
     val right = j.right
     def fromLeft(e: Expression) = e.references.subsetOf(left.outputSet) &&
@@ -136,35 +138,34 @@ object RangeJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     } yield (t1, lo, hi)).headOption
     bound.map { case (t, lo, hi) =>
       // left: project the probe bucket
-      val lBucket = Alias(bucketOf(t, width), "__graft_bucket_l")()
+      val lBucket = Alias(bucketOf(t), "__graft_bucket_l")()
       val newLeft = Project(left.output :+ lBucket, left)
       // right: explode the interval's covered buckets (guarded — Sequence
       // counts DOWNWARD when stop < start, which an empty interval hits)
-      val loB = bucketOf(lo, width)
-      val hiB = bucketOf(hi, width)
+      val loB = bucketOf(lo)
+      val hiB = bucketOf(hi)
       // Sequence is TimeZoneAwareExpression too — set the zone explicitly
       val seq = Sequence(loB, hiB, None, Option(conf.sessionLocalTimeZone))
       // an interval vastly wider than the bucket width (sentinel hi values,
-      // or long-typed bounds in different units than bucketSeconds) would
-      // explode each right row into millions of copies — fail fast with an
+      // or long-typed bounds in finer units than seconds) would explode
+      // each right row into millions of copies — fail fast with an
       // actionable message instead of a silent OOM/array-overflow
-      val maxBuckets = conf.getConfString(maxBucketsKey, "100000").toLong
       val overflow = Cast(
         new RaiseError(Literal(
-          s"RangeJoinRewrite: interval spans more than $maxBuckets " +
-            s"buckets of $width — raise $bucketKey to ~the interval " +
-            s"length (or $maxBucketsKey, or disable $enabledKey)")),
+          s"RangeJoinRewrite: interval spans more than $MaxBucketsPerInterval " +
+            s"buckets of $BucketWidth — state this join with " +
+            "TemporalJoins.bucketedRangeJoin and a bucket width of about " +
+            "the interval length")),
         seq.dataType, Option(conf.sessionLocalTimeZone))
-      // overflow-safe span check: a long Subtract(hiB, loB) can wrap
-      // negative with sentinel bounds (hi near Long.MaxValue, lo deeply
-      // negative) under bucketSeconds=1, silently bypassing this guard and
-      // surfacing as Sequence's less-actionable too-long error instead.
-      // Double subtraction cannot wrap; its ~2^-52 relative error is
-      // irrelevant for a threshold test on a heuristic cap.
+      // span check in doubles: sentinel bounds (hi near Long.MaxValue, lo
+      // deeply negative) must reach this guard, not Sequence's
+      // less-actionable too-long error, and a double difference cannot
+      // wrap; its ~2^-52 relative error is irrelevant for a threshold test
+      // on a heuristic cap.
       val covered = If(
         GreaterThan(
           Subtract(Cast(hiB, DoubleType), Cast(loB, DoubleType)),
-          Literal(maxBuckets.toDouble)),
+          Literal(MaxBucketsPerInterval.toDouble)),
         overflow,
         If(GreaterThanOrEqual(hiB, loB), seq,
           Literal.create(Array.empty[Long], seq.dataType)))

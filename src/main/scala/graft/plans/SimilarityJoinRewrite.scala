@@ -64,22 +64,14 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType,
   * worse than what it replaces, but for unblocked corpora with stopword
   * shingles prefer the prefix-filter operator, which prunes by rarest
   * element instead of joining on all of them.
-  *
-  * Fires only when `spark.graft.similarityJoinRewrite=true` (set it on the
-  * session BEFORE the action — optimizer confs are read at optimization
-  * time, not DataFrame build).
   */
 object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val enabledKey = "spark.graft.similarityJoinRewrite"
-
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(enabledKey, "false").toBoolean) return plan
+  override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {
       case j @ Join(_, _, Inner, Some(cond), _) =>
         rewrite(j, cond).getOrElse(j)
     }
-  }
 
   /** Strip the no-op numeric casts the analyzer inserts around `size` when
     * typing the division.
@@ -97,10 +89,10 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * default) `size(NULL) = -1`, so a NULL array scores -1/-1 = 1.0 against
     * EVERYTHING — cross-join semantics no equality rewrite can express.
     * The rewrite is therefore only sound when the sizes use modern
-    * semantics (`spark.sql.legacy.sizeOfNull=false`, where a null operand
-    * nulls the predicate) OR both array expressions are statically
-    * non-nullable. Queries wanting the rewrite on nullable arrays should
-    * set the conf — which also gives the saner similarity semantics.
+    * semantics (where a null operand nulls the predicate) OR both array
+    * expressions are statically non-nullable. `Text.jaccardSim` and
+    * `graft_jaccard` build their sizes with modern semantics, so their
+    * joins stay rewritable on nullable arrays.
     */
   private def jaccardOperands(e: Expression)
       : Option[(Expression, Expression, Boolean)] =

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.analytics.Sessions
 import graft.ingest.EventIngest
 import graft.lake.Lake
@@ -23,7 +22,9 @@ import org.apache.spark.sql.functions._
   * Lake.readPartition (partition-pruned read), Sessions gold,
   * Jdbc.overwrite — chained, not mocked.
   */
-class E2EPipelineSpec extends SparkTestBase {
+class E2EPipelineSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_e2e_ckpt", "graft_e2e_lake")
 
   System.setProperty("derby.stream.error.file",
     sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-derby.log")
@@ -77,8 +78,8 @@ class E2EPipelineSpec extends SparkTestBase {
       .MemoryStream[String]
     val kafkaShaped = input.toDF()
       .select(col("value").cast("binary").as("value"))
-    val out = Files.createTempDirectory("graft_e2e_lake").toString
-    val ckpt = Files.createTempDirectory("graft_e2e_ckpt").toString
+    val out = tempDir("graft_e2e_lake").toString
+    val ckpt = tempDir("graft_e2e_ckpt").toString
     val q = Lake.startStreamingSink(
       EventIngest.pipeline(kafkaShaped), out, ckpt)
     try {

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.GraftSession
 
@@ -9,6 +11,21 @@ import graft.core.GraftSession
   */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = GraftSession.local(4)
+
+  /** Runs `f` as the session plans it when `on`; when not, with `rule`
+    * named in `spark.sql.optimizer.excludedRules` — the nested-loop control
+    * of the graft join rewrites, which otherwise fire wherever their
+    * pattern matches. The conf is read at optimization time, so plan and
+    * collect inside `f`.
+    */
+  protected def withRule[A](rule: Rule[LogicalPlan], on: Boolean)(f: => A): A =
+    if (on) f
+    else {
+      val key = "spark.sql.optimizer.excludedRules"
+      val old = spark.conf.getOption(key)
+      spark.conf.set(key, rule.ruleName)
+      try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
 
   /** Bit-level row image for "verbatim old form ≡ new form" pins: sorted
     * rows, doubles via doubleToRawLongBits (a 1-ulp or -0.0 drift fails),

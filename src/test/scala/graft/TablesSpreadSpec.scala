@@ -15,7 +15,9 @@ import org.apache.spark.sql.functions._
   * spec pins the DECISION both ways so the probe rewrite is
   * behavior-preserving, and proves no job runs to make it.
   */
-class TablesSpreadSpec extends SparkTestBase {
+class TablesSpreadSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-spread")
 
   /** Synthetic sfDir holding only a documents table written as `files`
     * parquet files (tiny files never merge into one split: each carries
@@ -23,7 +25,7 @@ class TablesSpreadSpec extends SparkTestBase {
     * at this size).
     */
   private def mkDocs(files: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-spread").toString
+    val dir = tempDir("graft-spread").toString
     spark.range(512)
       .select(col("id").as("doc_id"),
         concat(lit("body of document "), col("id")).as("text"))

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 
@@ -8,7 +8,9 @@ import org.apache.spark.sql.functions._
   * and winnowing fingerprints (properties a fixture-oracle compare can't
   * express — handcrafted adversarial strings, the winnowing guarantee).
   */
-class PiiWinnowSpec extends SparkTestBase {
+class PiiWinnowSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("winnow")
 
   private def redact(s: String): String = {
     val sp = spark
@@ -54,7 +56,7 @@ class PiiWinnowSpec extends SparkTestBase {
     * here) MUST share at least one fingerprint.
     */
   test("winnowing: documents sharing a >= w+2-shingle run share a fingerprint") {
-    val dir = java.nio.file.Files.createTempDirectory("winnow").toString
+    val dir = tempDir("winnow").toString
     val sp = spark
     import sp.implicits._
     val shared = "alpha bravo charlie delta echo foxtrot golf hotel"
@@ -93,7 +95,7 @@ class PiiWinnowSpec extends SparkTestBase {
   }
 
   test("winnowing: short documents (1..3 shingles) yield their single min hash") {
-    val dir = java.nio.file.Files.createTempDirectory("winnow2").toString
+    val dir = tempDir("winnow2").toString
     val sp = spark
     import sp.implicits._
     Seq(

@@ -4,7 +4,7 @@ import java.lang.ref.WeakReference
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import graft.{SparkEntry, SparkTestBase}
-import graft.operators.{Dedup, Skew, TemporalJoins}
+import graft.operators.{Dedup, Skew}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
@@ -19,10 +19,11 @@ class DerivedSessionSpec extends SparkTestBase {
 
   /** The catalogue entries that run on a derived session, with its confs. */
   private val derivedQueries = Seq(
-    "q65_range_join_rewrite" -> TemporalJoins.RangeJoinRewriteConfs,
-    "q261_hamming_join_rewrite" -> Dedup.HammingJoinRewriteConfs,
     "q75_sim_join_rewrite" -> Dedup.SimilarityJoinRewriteConfs,
     "q80_salted_join" -> Skew.SaltedJoinConfs)
+
+  /** The rule-planned entries that run on the caller's session. */
+  private val callerQueries = Seq("q65_range_join_rewrite", "q261_hamming_join_rewrite")
 
   private def run(name: String): Unit =
     SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
@@ -57,7 +58,7 @@ class DerivedSessionSpec extends SparkTestBase {
   }
 
   test("a second warm call of each derived-session query compiles no code") {
-    derivedQueries.foreach { case (name, _) =>
+    (derivedQueries.map(_._1) ++ callerQueries).foreach { name =>
       run(name)
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       run(name)
@@ -75,26 +76,9 @@ class DerivedSessionSpec extends SparkTestBase {
     s
   }
 
-  test("q65 on the derived session is bit-identical to the fresh-session form") {
-    val s = freshWith(
-      "spark.graft.rangeJoinRewrite" -> "true",
-      "spark.graft.rangeJoin.bucketSeconds" -> "86400")
-    assert(bits(TemporalJoins.shipmentsNearOrderRewrittenOn(s, sf))
-      == bits(TemporalJoins.shipmentsNearOrderRewritten(spark, sf)))
-  }
-
-  test("q261 on the derived session is bit-identical to the fresh-session form") {
-    val s = freshWith("spark.graft.hammingJoinRewrite" -> "true")
-    assert(bits(Dedup.simhashPairsPlannedOn(s, sf, 3))
-      == bits(Dedup.simhashPairsPlanned(spark, sf)))
-  }
-
   test("q75 on the derived session is bit-identical to the fresh-session form") {
-    val s = freshWith(
-      "spark.graft.similarityJoinRewrite" -> "true",
-      "spark.sql.legacy.sizeOfNull" -> "false",
-      "spark.sql.optimizer.excludedRules" ->
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+    val s = freshWith("spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
     assert(bits(Dedup.jaccardPairsRewriteOn(s, sf, 0.8, None))
       == bits(Dedup.jaccardPairsRewrite(spark, sf)))
   }
@@ -116,5 +100,16 @@ class DerivedSessionSpec extends SparkTestBase {
       .map(root.relativize(_: Path).toString).toList
     assert(offenders.isEmpty,
       s"per-call newSession() in query code; use GraftSession.derived: $offenders")
+  }
+
+  test("no spark.graft.* conf key appears in main sources") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root not found")
+    val offenders = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => Files.readString(p).contains("spark.graft."))
+      .map(root.relativize(_: Path).toString).toList
+    assert(offenders.isEmpty,
+      s"the planner takes no spark.graft.* settings; the join rewrites fire on plan shape: $offenders")
   }
 }

@@ -1,13 +1,15 @@
 package graft.datagen
 
 import java.nio.file.Files
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 
-class DataGenSpec extends SparkTestBase {
+class DataGenSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_csv", "graft_feb")
 
   test("csvReplay reads the eCommerce schema with the record cap") {
-    val dir = Files.createTempDirectory("graft_csv")
+    val dir = tempDir("graft_csv")
     val csv =
       """user_id,event_type,product_id,event_time,category_id,category_code,brand,price,user_session
         |u1,view,p1,2019-10-01 00:00:00 UTC,c1,electronics.phone,apple,99.5,s1
@@ -21,7 +23,7 @@ class DataGenSpec extends SparkTestBase {
 
   test("kafka payload shaping round-trips through the ingest decoder") {
     val src = DataGen.csvReplay(spark, {
-      val dir = Files.createTempDirectory("graft_csv2")
+      val dir = tempDir("graft_csv2")
       Files.write(dir.resolve("e.csv"),
         """user_id,event_type,product_id,event_time,category_id,category_code,brand,price,user_session
           |u9,view,p9,2019-10-02 03:04:05 UTC,c9,a.b,z,1.5,s9""".stripMargin.getBytes("UTF-8"))
@@ -49,7 +51,7 @@ class DataGenSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
-    val out = Files.createTempDirectory("graft_feb").toString
+    val out = tempDir("graft_feb").toString
     val q = input.toDF().writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
         // stands in for Jdbc.appendBatch (no database in this environment):

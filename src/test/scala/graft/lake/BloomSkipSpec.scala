@@ -1,6 +1,6 @@
 package graft.lake
 
-import graft.{ScanMeter, SparkTestBase}
+import graft.{ScanMeter, SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** q383 end-to-end: parquet bloom filters must actually skip row groups
@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * minus the bloom — its scan has to surface every row; the bloom scan
   * must surface only the few row groups whose filter says "maybe".
   */
-class BloomSkipSpec extends SparkTestBase with ScanMeter {
+class BloomSkipSpec extends SparkTestBase with ScanMeter with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-nobloom")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -24,7 +26,7 @@ class BloomSkipSpec extends SparkTestBase with ScanMeter {
     assert(bloomRows.map(_.head) === Set(7L, 123L, 789L))
 
     // control: identical rows, identical hash-shuffled layout, NO bloom
-    val control = java.nio.file.Files.createTempDirectory("graft-nobloom")
+    val control = tempDir("graft-nobloom")
       .resolve("events_n").toString
     graft.core.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), col("event_type"),

@@ -1,6 +1,6 @@
 package graft.lake
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.core.Tables
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.conf.Configuration
@@ -17,7 +17,9 @@ import scala.jdk.CollectionConverters._
   * back with parquet-hadoop — the exact stats a scan's row-group filter
   * consults — and replays the pruning decision.
   */
-class LakeClusteredSpec extends SparkTestBase {
+class LakeClusteredSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-zorder")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -62,7 +64,7 @@ class LakeClusteredSpec extends SparkTestBase {
   }
 
   test("z-clustered layout prunes the 2-D predicate; natural layout cannot") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val tmp = tempDir("graft-zorder").toString
     val natural = s"$tmp/natural"
     val zorder = s"$tmp/zorder"
     // natural: insertion order spread round-robin over the same file count

@@ -1,18 +1,19 @@
 package graft.lake
 
-import java.nio.file.Files
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 
 /** The ORC side of the lake: same partition layout, pruning, pushdown,
   * and exactly-once streaming contracts LakeSpec pins for parquet.
   */
-class LakeOrcSpec extends SparkTestBase {
+class LakeOrcSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_orc")
 
   test("partitioned ORC write + pruned read with predicate pushdown") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = tempDir("graft_orc").toString
     val df = Seq(
       ("u1", 5L, "2024-01-01"), ("u2", 9L, "2024-01-01"),
       ("u3", 2L, "2024-01-02"))
@@ -41,8 +42,8 @@ class LakeOrcSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-    val out = Files.createTempDirectory("graft_orc_sink").toString
-    val ckpt = Files.createTempDirectory("graft_orc_ckpt").toString
+    val out = tempDir("graft_orc_sink").toString
+    val ckpt = tempDir("graft_orc_ckpt").toString
     val q = Lake.streamingSink(
       input.toDF().toDF("user_id", "extracted_date"), out, ckpt,
       format = "orc").start()

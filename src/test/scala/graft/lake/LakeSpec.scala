@@ -1,15 +1,16 @@
 package graft.lake
 
-import java.nio.file.Files
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 
-class LakeSpec extends SparkTestBase {
+class LakeSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_ckpt", "graft_lake", "graft_rec", "graft_sink")
 
   test("partitioned write + both read forms prune to one partition") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_lake").toString
+    val dir = tempDir("graft_lake").toString
     val df = Seq(
       ("u1", "2024-01-01"), ("u2", "2024-01-01"), ("u3", "2024-01-02"))
       .toDF("user_id", "extracted_date")
@@ -35,8 +36,8 @@ class LakeSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-    val out = Files.createTempDirectory("graft_sink").toString
-    val ckpt = Files.createTempDirectory("graft_ckpt").toString
+    val out = tempDir("graft_sink").toString
+    val ckpt = tempDir("graft_ckpt").toString
     val q = Lake.startStreamingSink(
       input.toDF().toDF("user_id", "extracted_date"), out, ckpt)
     try {
@@ -76,8 +77,8 @@ class LakeSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-    val out = Files.createTempDirectory("graft_rec").toString
-    val ckpt = Files.createTempDirectory("graft_rec_ckpt").toString
+    val out = tempDir("graft_rec").toString
+    val ckpt = tempDir("graft_rec_ckpt").toString
     val df = input.toDF().toDF("user_id", "extracted_date")
 
     val q1 = Lake.startStreamingSink(df, out, ckpt)

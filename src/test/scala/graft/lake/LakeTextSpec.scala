@@ -1,7 +1,6 @@
 package graft.lake
 
-import java.nio.file.Files
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -11,7 +10,9 @@ import org.apache.spark.sql.types._
   * contract the Lake scaladoc states), schemas are explicit, and the
   * streaming file-sink log still gives exactly-once.
   */
-class LakeTextSpec extends SparkTestBase {
+class LakeTextSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_csv", "graft_json")
 
   private val schema = StructType(Seq(
     StructField("user_id", StringType),
@@ -21,7 +22,7 @@ class LakeTextSpec extends SparkTestBase {
   test("partitioned JSON write + pruned read; predicate filters post-decode") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = tempDir("graft_json").toString
     val df = Seq(
       ("u1", 5L, "2024-01-01"), ("u2", 9L, "2024-01-01"),
       ("u3", 2L, "2024-01-02"))
@@ -50,7 +51,7 @@ class LakeTextSpec extends SparkTestBase {
   test("partitioned CSV write + pruned read round-trips types via explicit schema") {
     val s = spark
     import s.implicits._
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = tempDir("graft_csv").toString
     val df = Seq(
       ("u1", 5L, "2024-01-01"), ("u2", 9L, "2024-01-01"),
       ("u3", 2L, "2024-01-02"))
@@ -74,8 +75,8 @@ class LakeTextSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-    val out = Files.createTempDirectory("graft_json_sink").toString
-    val ckpt = Files.createTempDirectory("graft_json_ckpt").toString
+    val out = tempDir("graft_json_sink").toString
+    val ckpt = tempDir("graft_json_ckpt").toString
     val jsonSchema = StructType(Seq(
       StructField("user_id", StringType),
       StructField("extracted_date", StringType)))

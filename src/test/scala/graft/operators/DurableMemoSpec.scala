@@ -73,6 +73,13 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
     SessionMemo.invalidate(spark)
   }
 
+  test("the test JVM publishes outside the default per-user root") {
+    // entries published by this suite must not fill the GC rank of the
+    // root that Verify and Bench read (build.sbt sets GRAFT_MEMO_DIR)
+    assert(DurableCache.root != DurableCache.defaultRoot,
+      s"tests publish into the per-user cache ${DurableCache.defaultRoot}")
+  }
+
   test("on: builds once, later JVM reads parquet with identical rows+schema") {
     withDurable {
       val fix = mkFixture()

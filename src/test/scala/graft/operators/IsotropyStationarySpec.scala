@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.functions.col
 
 /** Semantics of q171 (embedding isotropy) and q172 (Markov stationary
@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions.col
   * mass conservation and the fixed-point property (one more iteration
   * moves nothing beyond truncation noise).
   */
-class IsotropyStationarySpec extends SparkTestBase {
+class IsotropyStationarySpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-iso")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -47,7 +49,7 @@ class IsotropyStationarySpec extends SparkTestBase {
     // a unit vector mixed in with them still aggregates exactly
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-iso").toString
+    val dir = tempDir("graft-iso").toString
     val d = 64
     // subnormal-double territory is below float range, so build the frame
     // with DOUBLE arrays directly (isotropy's cast to array<double> is id)

@@ -1,13 +1,15 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, count, lit}
 
 /** Operator-level invariants on the real testdata (sf0.001) — these
   * complement the DuckDB oracle with structural properties.
   */
-class OperatorsSpec extends SparkTestBase {
+class OperatorsSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_shards")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -260,7 +262,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("training-shard writer: survivors only, gapless per-shard packing, partitioned layout") {
-    val out = java.nio.file.Files.createTempDirectory("graft_shards").toString
+    val out = tempDir("graft_shards").toString
     val manifest = Curation.writeTrainingShards(spark, sf, out, capacity = 512, nShards = 4)
       .collect()
     val kept = Curation.curationDecisions(spark, sf)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,7 +12,9 @@ import org.apache.spark.sql.types._
   * corpus-scale rebuild of either), and principalDirection must return
   * an empty typed frame — not throw — on an empty embeddings table.
   */
-class Round16OpsSpec extends SparkTestBase {
+class Round16OpsSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-empty-sf")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -73,7 +75,7 @@ class Round16OpsSpec extends SparkTestBase {
   }
 
   test("principalDirection returns an empty typed frame on empty embeddings") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-empty-sf")
+    val dir = tempDir("graft-empty-sf")
       .toString
     val schema = StructType(Seq(
       StructField("vec_id", LongType),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.analytics.TextAnalytics
 import org.apache.spark.sql.functions.{col, unix_micros}
 
@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions.{col, unix_micros}
   * where the expectation is computable by hand; the DuckDB oracle covers
   * exact corpus values at sf0.01.
   */
-class Round6OpsSpec extends SparkTestBase {
+class Round6OpsSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("convlag")
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -1105,7 +1107,7 @@ class Round6OpsSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     def t(day: Int) = new java.sql.Timestamp(1700000000000L + day * 86400000L)
-    val dir = java.nio.file.Files.createTempDirectory("convlag").toString
+    val dir = tempDir("convlag").toString
     // conversionLag reads a table dir; write the fixture as parquet
     Seq(
       (1L, t(0), 1L, "view"), (1L, t(3), 2L, "purchase"), (1L, t(5), 3L, "purchase"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** Property tests for the multimodal kernels against in-JVM reference
   * computations on RANDOM payloads — including the degenerate lengths the
@@ -13,7 +13,9 @@ import graft.SparkTestBase
   * inside the box while preserving aspect up to integral truncation.
   * Seeded generators, deterministic samples (the suite's convention).
   */
-class Round8PropSpec extends SparkTestBase {
+class Round8PropSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_r8prop")
 
   private def sample[A](g: Gen[A], seed: Long): A =
     g.apply(Gen.Parameters.default, Seed(seed))
@@ -32,7 +34,7 @@ class Round8PropSpec extends SparkTestBase {
   private def writeDocs(docs: List[String]): String = {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r8prop").toString
+    val dir = tempDir("graft_r8prop").toString
     docs.zipWithIndex
       .map { case (t, i) => (i.toLong, t, "en", s"src${i % 3}", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")

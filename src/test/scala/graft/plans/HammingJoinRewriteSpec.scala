@@ -38,10 +38,7 @@ class HammingJoinRewriteSpec extends SparkTestBase {
     l.join(r, bit_count(col("h_a").bitwiseXOR(col("h_b"))) <= d)
       .select(col("id_a"), col("id_b"))
 
-  private def withRule[A](on: Boolean)(f: => A): A = {
-    spark.conf.set("spark.graft.hammingJoinRewrite", on.toString)
-    try f finally spark.conf.set("spark.graft.hammingJoinRewrite", "false")
-  }
+  private def withRule[A](on: Boolean)(f: => A): A = withRule(HammingJoinRewrite, on)(f)
 
   private def rows(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted

@@ -32,10 +32,7 @@ class RangeJoinRewriteSpec extends SparkTestBase {
     p.join(w, col("t") >= col("lo") && col("t") < col("hi"))
       .select(col("win_id"), col("event_id"))
 
-  private def withRule[A](on: Boolean)(f: => A): A = {
-    spark.conf.set("spark.graft.rangeJoinRewrite", on.toString)
-    try f finally spark.conf.set("spark.graft.rangeJoinRewrite", "false")
-  }
+  private def withRule[A](on: Boolean)(f: => A): A = withRule(RangeJoinRewrite, on)(f)
 
   test("rewritten interval join returns exactly the nested-loop results") {
     val expected = withRule(on = false) {
@@ -121,20 +118,14 @@ class RangeJoinRewriteSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     val p = (1L to 10L).map(i => (i, i)).toDF("id", "x")
-    val w = Seq((1L, 0L, 10_000_000L)).toDF("wid", "lo", "hi") // huge span
-    spark.conf.set("spark.graft.rangeJoin.maxBucketsPerInterval", "100")
-    spark.conf.set("spark.graft.rangeJoin.bucketSeconds", "1")
-    try withRule(on = true) {
-      val e = intercept[Exception] {
-        p.join(w, col("x") >= col("lo") && col("x") <= col("hi")).collect()
-      }
-      assert(e.getMessage.contains("RangeJoinRewrite") ||
-        Option(e.getCause).exists(_.getMessage.contains("RangeJoinRewrite")),
-        s"unexpected error: ${e.getMessage}")
-    } finally {
-      spark.conf.unset("spark.graft.rangeJoin.maxBucketsPerInterval")
-      spark.conf.unset("spark.graft.rangeJoin.bucketSeconds")
+    // huge span: 200000 one-day buckets, twice the per-interval cap
+    val w = Seq((1L, 0L, 86400L * 200000L)).toDF("wid", "lo", "hi")
+    val e = intercept[Exception] {
+      p.join(w, col("x") >= col("lo") && col("x") <= col("hi")).collect()
     }
+    assert(e.getMessage.contains("RangeJoinRewrite") ||
+      Option(e.getCause).exists(_.getMessage.contains("RangeJoinRewrite")),
+      s"unexpected error: ${e.getMessage}")
   }
 
   test("bucket-span guard survives long-wrapping sentinel bounds") {
@@ -145,20 +136,13 @@ class RangeJoinRewriteSpec extends SparkTestBase {
     // check must still raise the ACTIONABLE error, not fall through to
     // Sequence's own too-long-sequence failure
     val w = Seq((1L, Long.MinValue / 2, Long.MaxValue / 2)).toDF("wid", "lo", "hi")
-    spark.conf.set("spark.graft.rangeJoin.maxBucketsPerInterval", "100")
-    spark.conf.set("spark.graft.rangeJoin.bucketSeconds", "1")
-    try withRule(on = true) {
-      val e = intercept[Exception] {
-        p.join(w, col("x") >= col("lo") && col("x") <= col("hi")).collect()
-      }
-      def messages(t: Throwable): Seq[String] =
-        Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
-      assert(messages(e).exists(_.contains("RangeJoinRewrite")),
-        s"guard did not fire with the actionable message: $e")
-    } finally {
-      spark.conf.unset("spark.graft.rangeJoin.maxBucketsPerInterval")
-      spark.conf.unset("spark.graft.rangeJoin.bucketSeconds")
+    val e = intercept[Exception] {
+      p.join(w, col("x") >= col("lo") && col("x") <= col("hi")).collect()
     }
+    def messages(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ messages(x.getCause))
+    assert(messages(e).exists(_.contains("RangeJoinRewrite")),
+      s"guard did not fire with the actionable message: $e")
   }
 
   test("integral-typed ranges rewrite too") {
@@ -186,7 +170,5 @@ class RangeJoinRewriteSpec extends SparkTestBase {
     val manual = graft.operators.TemporalJoins.shipmentsNearOrder(spark, sf)
       .collect().map(_.toSeq).toSet
     assert(df.collect().map(_.toSeq).toSet === manual)
-    // conf isolation: the entry must not flip the rule on in the CALLER's session
-    assert(spark.conf.get("spark.graft.rangeJoinRewrite", "false") === "false")
   }
 }

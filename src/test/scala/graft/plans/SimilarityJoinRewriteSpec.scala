@@ -43,20 +43,16 @@ class SimilarityJoinRewriteSpec extends SparkTestBase {
     l.join(r, Text.jaccardSim(col("arr_a"), col("arr_b")) >= t)
       .select(col("id_a"), col("id_b"))
 
-  // modern size-of-null semantics (size(NULL) = NULL): under the legacy
-  // default, a NULL array jaccard-scores -1/-1 = 1.0 against EVERYTHING —
-  // the rule refuses to rewrite that (cross-join semantics), so both the
-  // control and rewritten runs pin the conf BEFORE analysis bakes the flag
-  // into the Size nodes
-  private def withRule[A](on: Boolean)(f: => A): A = {
-    val old = spark.conf.get("spark.sql.legacy.sizeOfNull")
-    spark.conf.set("spark.sql.legacy.sizeOfNull", "false")
-    spark.conf.set("spark.graft.similarityJoinRewrite", on.toString)
-    try f finally {
-      spark.conf.set("spark.graft.similarityJoinRewrite", "false")
-      spark.conf.set("spark.sql.legacy.sizeOfNull", old)
-    }
-  }
+  private def withRule[A](on: Boolean)(f: => A): A = withRule(SimilarityJoinRewrite, on)(f)
+
+  /** The Jaccard composition under the session's LEGACY size-of-null
+    * default (`size(NULL) = -1`), built inline: `Text.jaccardSim` bakes in
+    * modern semantics, and these cases test the rule's legacy check.
+    */
+  private def legacySimJoin(l: DataFrame, r: DataFrame, t: Double): DataFrame =
+    l.join(r, size(array_intersect(col("arr_a"), col("arr_b"))).cast("double") /
+        size(array_union(col("arr_a"), col("arr_b"))) >= t)
+      .select(col("id_a"), col("id_b"))
 
   private def rows(df: DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
@@ -69,6 +65,8 @@ class SimilarityJoinRewriteSpec extends SparkTestBase {
     assert(expected.count(_ == (2L, 102L)) === 2)
     // null-element-only overlap must survive the rewrite (null-safe key)
     assert(expected.contains((6L, 106L)))
+    // a null array scores NULL, so it pairs with nothing
+    assert(!expected.exists(p => p._1 == 5L || p._2 == 105L))
     assert(got === expected)
   }
 
@@ -112,33 +110,26 @@ class SimilarityJoinRewriteSpec extends SparkTestBase {
   }
 
   test("legacy sizeOfNull + nullable arrays is NOT rewritten (null scores 1.0 vs all)") {
-    spark.conf.set("spark.graft.similarityJoinRewrite", "true")
-    try {
-      assert(spark.conf.get("spark.sql.legacy.sizeOfNull") === "true",
-        "engine default changed — revisit the soundness gate")
-      val df = simJoin(leftRows, rightRows, 0.5)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("__graft_sim_elem"),
-        s"rule fired under legacy size(NULL) semantics on nullable arrays:\n$plan")
-      // and the legacy nested loop indeed pairs the null array with all rows
-      assert(rows(df).contains((5L, 103L)))
-    } finally spark.conf.set("spark.graft.similarityJoinRewrite", "false")
+    assert(spark.conf.get("spark.sql.legacy.sizeOfNull") === "true",
+      "engine default changed — revisit the soundness gate")
+    val df = legacySimJoin(leftRows, rightRows, 0.5)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("__graft_sim_elem"),
+      s"rule fired under legacy size(NULL) semantics on nullable arrays:\n$plan")
+    // and the legacy nested loop indeed pairs the null array with all rows
+    assert(rows(df).contains((5L, 103L)))
   }
 
   test("legacy sizeOfNull with NON-nullable arrays still rewrites") {
-    spark.conf.set("spark.graft.similarityJoinRewrite", "true")
-    try {
-      val l = leftRows.select(col("id_a"), array(lit("x"), lit("y")).as("arr_a"))
-      val r = rightRows.select(col("id_b"), array(lit("y"), lit("x")).as("arr_b"))
-      val df = simJoin(l, r, 0.5)
-      assert(df.queryExecution.executedPlan.toString.contains("__graft_sim_elem"))
-      assert(rows(df).size === leftRows.count() * rightRows.count())
-    } finally spark.conf.set("spark.graft.similarityJoinRewrite", "false")
+    val l = leftRows.select(col("id_a"), array(lit("x"), lit("y")).as("arr_a"))
+    val r = rightRows.select(col("id_b"), array(lit("y"), lit("x")).as("arr_b"))
+    val df = legacySimJoin(l, r, 0.5)
+    assert(df.queryExecution.executedPlan.toString.contains("__graft_sim_elem"))
+    assert(rows(df).size === leftRows.count() * rightRows.count())
   }
 
   test("ANSI-typed division is not rewritten (0/0 on empty arrays must keep raising)") {
     spark.conf.set("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.graft.similarityJoinRewrite", "true")
     try {
       // built under ANSI: the Divide carries EvalMode.ANSI, where the
       // nested loop raises DIVIDE_BY_ZERO for an empty-vs-empty pair that
@@ -147,10 +138,7 @@ class SimilarityJoinRewriteSpec extends SparkTestBase {
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("__graft_sim_elem"),
         s"rule fired on an ANSI division:\n$plan")
-    } finally {
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      spark.conf.set("spark.graft.similarityJoinRewrite", "false")
-    }
+    } finally spark.conf.set("spark.sql.ansi.enabled", "false")
   }
 
   test("joins with an equality conjunct are left for the hash join planner") {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** Stream-maintained activity bitmaps ≡ batch recompute, and — the
   * property that distinguishes the OR-merge from the q333 sum-merge —
@@ -11,7 +11,9 @@ import graft.SparkTestBase
   * path (spans past 63 days) the q346 single-word operator fails loudly
   * on, and round-trips the store back to the user-day grain.
   */
-class BitmapMaintainSpec extends SparkTestBase {
+class BitmapMaintainSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-bm")
 
   private def store(path: String) =
     spark.read.parquet(path).collect()
@@ -21,7 +23,7 @@ class BitmapMaintainSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft-bm")
+    val path = tempDir("graft-bm")
       .resolve("bits").toString
     // user 1 spans two words (day 0 and day 70); user 2 repeats a day
     val b1 = Seq((1L, "2024-01-01 10:00:00"), (2L, "2024-01-02 09:00:00"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** Stream-maintained gold rollup ≡ batch recompute (VERDICT r8 item 6):
   * the q333 merge law driven through foreachBatch over a MemoryStream —
@@ -11,7 +11,9 @@ import graft.SparkTestBase
   * final store must equal Relational-style single-pass recompute
   * value-for-value (exact integers, so "hash-exact" is set equality).
   */
-class GoldMaintainSpec extends SparkTestBase {
+class GoldMaintainSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-gold")
 
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.select(col("day").cast("string"), col("cents"), col("n_orders"))
@@ -21,7 +23,7 @@ class GoldMaintainSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val gold = java.nio.file.Files.createTempDirectory("graft-gold")
+    val gold = tempDir("graft-gold")
       .resolve("rollup").toString
     val b1 = Seq(("1998-12-30 10:00:00", 10.004), ("1998-12-31 09:00:00", 20.0),
       ("1998-12-30 23:59:59", 5.555))
@@ -51,7 +53,7 @@ class GoldMaintainSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val gold = java.nio.file.Files.createTempDirectory("graft-gold2")
+    val gold = tempDir("graft-gold2")
       .resolve("rollup").toString
     def orders(df: org.apache.spark.sql.DataFrame) = df
       .select(col("_1").cast("timestamp").as("o_orderdate"),

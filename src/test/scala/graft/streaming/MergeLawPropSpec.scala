@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -12,12 +12,14 @@ import org.apache.spark.sql.functions._
   * final store equals the single-pass batch recompute over the UNIQUE
   * batches, no matter the schedule or the replays.
   */
-class MergeLawPropSpec extends SparkTestBase {
+class MergeLawPropSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-lawprop-")
 
   private val rnd = new scala.util.Random(0x10c0ffee)
 
   private def tmpStore(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-lawprop-$tag")
+    tempDir(s"graft-lawprop-$tag")
       .resolve("store").toString
 
   private def snapshot(path: String): Set[Seq[Any]] =

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
 /** The merge-law replay harness (VERDICT r9 item 5): every maintained
   * table states its law and gets the same replay test — apply a batch
@@ -20,10 +20,12 @@ import graft.SparkTestBase
   * is restored, a bak beside a live store (crash before cleanup) is
   * dropped.
   */
-class MergeLawSpec extends SparkTestBase {
+class MergeLawSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft-law-")
 
   private def tmpStore(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-law-$tag")
+    tempDir(s"graft-law-$tag")
       .resolve("store").toString
 
   private def snapshot(path: String): Set[Seq[Any]] =

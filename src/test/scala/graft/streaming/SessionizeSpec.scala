@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 import graft.model.Models.WebEvent
 
 /** Streaming sessionization semantics recovered from the reference
@@ -10,7 +10,9 @@ import graft.model.Models.WebEvent
   * watermark, append-mode emission only after the watermark passes window
   * end, and batch/stream equivalence of the same aggregation.
   */
-class SessionizeSpec extends SparkTestBase {
+class SessionizeSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_rocks")
 
   private def ts(minute: Int, sec: Int = 0): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:$sec%02d")
@@ -132,7 +134,7 @@ class SessionizeSpec extends SparkTestBase {
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[WebEvent]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rocks").toString
+    val ckpt = tempDir("graft_rocks").toString
     // the 100 TB state-store path is a conf switch, not a code change
     val key = "spark.sql.streaming.stateStore.providerClass"
     spark.conf.set(key,

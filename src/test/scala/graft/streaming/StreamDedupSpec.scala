@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import graft.SparkTestBase
+import graft.{SparkTestBase, TempDirs}
 
-class StreamDedupSpec extends SparkTestBase {
+class StreamDedupSpec extends SparkTestBase with TempDirs {
+
+  protected val tmpPrefixes = Seq("graft_neardup_gate")
 
   private def ts(minute: Int): Timestamp =
     Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
@@ -39,7 +41,7 @@ class StreamDedupSpec extends SparkTestBase {
     val s = spark
     import s.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_gate")
+    val dir = tempDir("graft_neardup_gate")
     val (hist, ckpt) = (s"$dir/history", s"$dir/ckpt")
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val hits = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
