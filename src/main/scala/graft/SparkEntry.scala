@@ -111,9 +111,7 @@ object SparkEntry {
     // the star-rewrite components resolver, against q50's exact oracle
     "q72_dedup_components_star" -> ((s: SparkSession, d: String) => graft.operators.Curation.dedupComponentsStar(s, d)),
     // exact Jaccard join DECLARED as a theta join, PLANNED by the
-    // SimilarityJoinRewrite optimizer rule (derived session for its Spark
-    // conf, built once per override set: a new session per call would
-    // recompile its generated code)
+    // SimilarityJoinRewrite optimizer rule, on the caller's session
     "q75_sim_join_rewrite" -> ((s: SparkSession, d: String) => Dedup.jaccardPairsRewrite(s, d)),
     // typed PII redaction + audit counts (map-side regexp chain)
     "q76_pii_scrub" -> ((s: SparkSession, d: String) => TextAnalytics.piiScrub(s, d)),

@@ -21,6 +21,10 @@ object GraftSession {
     * Registers [[graft.plans.GraftExtensions]]: the graft_cosine and
     * graft_jaccard SQL functions and the exact range, Jaccard and Hamming
     * join rewrite rules, which fire wherever their pattern matches.
+    *
+    * Every catalogue query runs on its caller's session and leaves that
+    * session's conf as it found it: a per-query physical choice lives in
+    * the plan (a rule, a join hint), never in session state.
     */
   def configure(b: SparkSession.Builder): SparkSession.Builder = b
     .withExtensions(new graft.plans.GraftExtensions)
@@ -35,36 +39,6 @@ object GraftSession {
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
     .config("spark.ui.enabled", "false")
-
-  /** Children of [[derived]], per parent session (weak, identity-keyed:
-    * SparkSession does not override equals) and per override map. A child
-    * holds the parent's SparkContext and shared state, never the parent
-    * object itself, so a dropped parent releases its whole entry.
-    */
-  private val derivedSessions =
-    new java.util.WeakHashMap[SparkSession, java.util.Map[Map[String, String], SparkSession]]()
-
-  /** The child session of `spark` with `overrides` set on its runtime conf,
-    * built once per (parent, override map) and never changed afterwards.
-    *
-    * Query code that needs different Spark confs (an excluded optimizer
-    * rule, a broadcast threshold) gets them here rather than
-    * by `spark.newSession()` per call: Spark caches generated code per
-    * session class loader and every new session gets its own, so each
-    * call would recompile all of its whole-stage generated code. The
-    * parent's runtime conf is never touched; the child starts from the
-    * same builder confs, extensions and SparkContext, like any
-    * `newSession()`.
-    */
-  def derived(spark: SparkSession, overrides: Map[String, String]): SparkSession =
-    derivedSessions.synchronized {
-      derivedSessions.computeIfAbsent(spark, _ => new java.util.HashMap())
-        .computeIfAbsent(overrides, _ => {
-          val s = spark.newSession()
-          overrides.foreach { case (k, v) => s.conf.set(k, v) }
-          s
-        })
-    }
 
   /** The data dir the driver-run mains read: `SPARK_GRAFT_SF_DIR`, sf0.1 by default. */
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

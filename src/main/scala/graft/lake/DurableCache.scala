@@ -33,8 +33,7 @@ object DurableCache {
 
   private[graft] def publishUnder(root: String, spark: SparkSession,
       sfDir: String, key: String)(write: String => Unit): String = {
-    val fp = md5hex(codeFingerprint + "\n" + envFingerprint(spark) + "\n" +
-      dataFingerprint(spark, sfDir))
+    val fp = fingerprint(spark, sfDir)
     // once per root and JVM: the set of live fingerprints does not change
     // under a running build
     if (swept.add(root)) gcStaleFingerprints(fp, root)
@@ -47,6 +46,13 @@ object DurableCache {
   }
 
   private val swept = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** The code+env+data fingerprint that names the directory under the
+    * root where [[publish]] lands the tables built over `sfDir`.
+    */
+  private[graft] def fingerprint(spark: SparkSession, sfDir: String): String =
+    md5hex(codeFingerprint + "\n" + envFingerprint(spark) + "\n" +
+      dataFingerprint(spark, sfDir))
 
   /** The configured root: `GRAFT_MEMO_DIR` when set, else a PER-USER
     * directory under `java.io.tmpdir` (`graft-memo-<user>`). A shared
@@ -259,11 +265,12 @@ object DurableCache {
     * one gate run (Verify at two scales + Bench each fingerprint a
     * different sfDir) and for one concurrent older-code JVM. Beyond the
     * keep-3 rank, a dir is only deleted once it has been UNMODIFIED for
-    * `minAgeMs` (6 h): a durable read-back is lazy, so a concurrent
-    * older-code JVM whose 4th-newest dir was swept would materialize a
-    * deleted parquet in its consumer's action and FAIL, not fall back. The
-    * residual race (a reader consuming a >6 h-cold dir exactly as a new JVM
-    * sweeps it) is accepted: best-effort GC must delete SOMETHING
+    * `minAgeMs` (6 h): a layout scan is lazy, so a concurrent older-code
+    * JVM whose 4th-newest dir was swept would read a deleted parquet in
+    * its consumer's action and FAIL (a memo read-back is materialized
+    * inside [[graft.operators.SessionMemo.durable]] and rebuilds instead).
+    * The residual race (a reader consuming a >6 h-cold dir exactly as a
+    * new JVM sweeps it) is accepted: best-effort GC must delete SOMETHING
     * eventually. Only names of the 32-hex fingerprint shape are touched.
     */
   private[graft] def gcStaleFingerprints(current: String, root: String,

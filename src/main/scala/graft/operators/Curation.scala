@@ -1589,6 +1589,7 @@ object Curation {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
     import org.apache.spark.sql.graftbridge.GraftBridge
+    import org.apache.spark.sql.internal.SQLConf
     import org.apache.spark.sql.types.BinaryType
     val spark = trainDocs.sparkSession
     def gramArr = array_distinct(transform(
@@ -1600,48 +1601,32 @@ object Curation {
     val bench = SessionMemo.ofPlan("bloomBenchGrams",
       benchDocs.select(explode(gramArr).as("gram_h")).distinct())
     // size the sketch to the actual bench cardinality (a bench-sized count,
-    // not a corpus job). The single-arg BloomFilterAggregate constructor
-    // silently clamps at spark.sql.optimizer.runtime.bloomFilter.maxNumItems
-    // / maxNumBits (4M items / 64M bits default) — in the very-large-
-    // benchmark regime this operator exists for, that would quietly degrade
-    // the FPP until the map-side prefilter stops pruning (the exact verify
-    // keeps outputs correct, but the scale benefit disappears). So: compute
-    // numBits explicitly for ~3% FPP, pass BOTH values through the
-    // (child, est, numBits) constructor, and raise the session's clamp
-    // confs around the sketch job so the explicit sizing actually takes
-    // effect (the aggregate re-clamps against SQLConf at eval time). Only a
-    // genuinely absurd sketch (> maxSketchBytes, default 128 MB — past any
-    // sane broadcast) is still clamped, and that clamp WARNS instead of
-    // degrading silently.
-    val est = math.max(bench.count(), 1L)
-    val maxSketchBytes = 128L << 20
-    val idealBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(est, 0.03)
-    val numBits = math.min(idealBits, maxSketchBytes * 8)
-    if (numBits < idealBits)
+    // not a corpus job) for ~3% FPP, and pass BOTH values through the
+    // (child, est, numBits) constructor. The aggregate re-clamps them at
+    // eval time against the session's
+    // spark.sql.optimizer.runtime.bloomFilter.maxNumItems / maxNumBits
+    // (4M items / 64M bits by default), so size within those maxima here
+    // and WARN when they bind: past them the prefilter FPP degrades and
+    // map-side pruning weakens, while the exact verify keeps the result
+    // exact. The session's conf is read, never changed.
+    val maxItems = spark.conf.get(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_ITEMS.key).toLong
+    val maxBits = spark.conf.get(SQLConf.RUNTIME_BLOOM_FILTER_MAX_NUM_BITS.key).toLong
+    val wanted = math.max(bench.count(), 1L)
+    val est = math.min(wanted, maxItems)
+    val idealBits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(wanted, 0.03)
+    val numBits = math.min(idealBits, maxBits)
+    if (est < wanted || numBits < idealBits)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"decontaminateBloomAgainst: bench gram cardinality $est wants " +
-          s"$idealBits bloom bits but the sketch is capped at $numBits " +
-          s"(${maxSketchBytes >> 20} MB); the prefilter FPP degrades above " +
-          "3% and map-side pruning weakens (results stay exact)")
-    val clampConfs = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumItems" -> est,
-      "spark.sql.optimizer.runtime.bloomFilter.maxNumBits" -> numBits)
-    val saved = clampConfs.map { case (k, v) =>
-      val old = spark.conf.getOption(k)
-      if (old.forall(_.toLong < v)) spark.conf.set(k, v)
-      k -> old
-    }
-    val bloomBytes =
-      try bench.agg(GraftBridge.column(
-          new BloomFilterAggregate(
-            GraftBridge.expression(col("gram_h")),
-            Literal(est), Literal(numBits)).toAggregateExpression())
-          .as("bf"))
-        .head().getAs[Array[Byte]]("bf")
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+        s"decontaminateBloomAgainst: bench gram cardinality $wanted wants " +
+          s"$idealBits bloom bits but the session caps the sketch at $est " +
+          s"items / $numBits bits; the prefilter FPP degrades above 3% and " +
+          "map-side pruning weakens (results stay exact)")
+    val bloomBytes = bench.agg(GraftBridge.column(
+        new BloomFilterAggregate(
+          GraftBridge.expression(col("gram_h")),
+          Literal(est), Literal(numBits)).toAggregateExpression())
+        .as("bf"))
+      .head().getAs[Array[Byte]]("bf")
     val mightContain = GraftBridge.column(new BloomFilterMightContain(
       Literal(bloomBytes, BinaryType),
       GraftBridge.expression(col("gram_h"))))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{GraftSession, Tables}
+import graft.core.Tables
 import graft.functions.{Hashing, Text}
 
 /** Document deduplication at corpus scale — exact, MinHash-LSH, SimHash,
@@ -263,10 +263,8 @@ object Dedup {
     * Same truth as [[jaccardPairsPrefix]] (no hot-shingle cap, nothing
     * dropped), demonstrating the planner-rule form of the similarity join:
     * the query says WHAT (a Jaccard threshold), the rule picks the
-    * scale-safe HOW. The entry runs on a derived session, built once per
-    * override set ([[GraftSession.derived]]: extensions inherited, runtime
-    * conf isolated), for the one Spark conf in [[SimilarityJoinRewriteConfs]];
-    * a new session per call would recompile all its generated code.
+    * scale-safe HOW. It runs on the caller's session: the rule fires on
+    * the plan's shape.
     *
     * Scope note: the rule itself PREFIX-FILTERS (AllPairs lemma over the
     * sorted-distinct arrays — see the rule's scaladoc), so its candidate
@@ -293,29 +291,7 @@ object Dedup {
     * this module already makes.
     */
   def jaccardPairsRewrite(spark: SparkSession, sfDir: String,
-      threshold: Double = 0.8, maxDocId: Option[Long] = None): DataFrame =
-    jaccardPairsRewriteOn(GraftSession.derived(spark, SimilarityJoinRewriteConfs),
-      sfDir, threshold, maxDocId)
-
-  /** The confs [[jaccardPairsRewrite]] runs under, set on its derived
-    * session before any DataFrame of it is built.
-    */
-  private[graft] val SimilarityJoinRewriteConfs = Map(
-    // InferFiltersFromGenerate + predicate pushdown is PATHOLOGICAL here:
-    // Catalyst infers `size(pfx) > 0 AND isnotnull(pfx)` from the rule's
-    // prefix explode, and pushdown substitutes the prefix alias through
-    // both Projects — inlining the whole shingle+md5 pipeline FOUR times
-    // into a Filter below the repartition Exchange, i.e. into the
-    // single-split serial scan stage (measured: 10.2 s → 2.0 s at sf0.1
-    // with the rule excluded). The inferred filter is pure overhead for
-    // this plan anyway — every document explodes a non-empty prefix, and
-    // the Generate itself drops empty arrays.
-    "spark.sql.optimizer.excludedRules" ->
-      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-
-  /** [[jaccardPairsRewrite]]'s query on a session carrying [[SimilarityJoinRewriteConfs]]. */
-  private[graft] def jaccardPairsRewriteOn(s: SparkSession, sfDir: String,
-      threshold: Double, maxDocId: Option[Long]): DataFrame = {
+      threshold: Double = 0.8, maxDocId: Option[Long] = None): DataFrame = {
     // Spread the doc table across the cluster BEFORE the shingle
     // pipeline: documents.parquet is a handful of parquet splits (one, at
     // the gate scales), so without this the per-row shingle+hash
@@ -335,8 +311,8 @@ object Dedup {
     // spread (measured: the whole pipeline ran as a single 5.7 s task).
     // Bytes-based coalescing is the wrong oracle for compute-bound
     // stages; pinning to the session's shuffle parallelism is the fix.
-    val shufflePartitions = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val base = Tables.documents(s, sfDir)
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val base = Tables.documents(spark, sfDir)
     val docs = maxDocId.fold(base)(m => base.where(col("doc_id") < m))
       .repartition(shufflePartitions, col("doc_id"))
       .select(col("doc_id"),

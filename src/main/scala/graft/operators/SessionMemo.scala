@@ -89,8 +89,8 @@ private[graft] object SessionMemo {
   }
   object Stats { val zero: Stats = Stats(0, 0, 0, 0.0) }
 
-  // JVM-wide, not per session, so builds on GraftSession.derived children
-  // are counted too; bounded by the number of distinct keys
+  // JVM-wide, not per session, so builds on every session are counted;
+  // bounded by the number of distinct keys
   private val stats = new ConcurrentHashMap[String, Stats]()
 
   // wall nanos of the memo builds recorded on this thread so far: a build's
@@ -136,8 +136,11 @@ private[graft] object SessionMemo {
         (self / 1e9, total / 1e9)
       }
       val df =
-        try build.persist(StorageLevel.MEMORY_AND_DISK)
-        catch { case e: Throwable => charge(failed = true); throw e }
+        try {
+          val b = build
+          // a durable read-back arrives persisted already
+          if (b.storageLevel == StorageLevel.NONE) b.persist(StorageLevel.MEMORY_AND_DISK) else b
+        } catch { case e: Throwable => charge(failed = true); throw e }
       val prev = tables.putIfAbsent(key, df)
       if (prev != null) {
         // lost the benign build race: release this thread's persist so the
@@ -191,7 +194,11 @@ private[graft] object SessionMemo {
     * failures in the durable TIER itself — an unwritable root (fails
     * before the build starts), or a post-build publish/read-back error —
     * log and fall back to the already-built in-memory frame; never to a
-    * wrong result.
+    * wrong result. The read-back is materialized here (persisted and
+    * counted), so a published entry that does not read back whole — a
+    * truncated or missing file, no sidecar — fails inside this call: its
+    * `_SUCCESS` marker is dropped and the entry republished once, and only
+    * then does the in-memory fallback serve the rows.
     */
   def durable(spark: SparkSession, sfDir: String, key: String)(
       build: => DataFrame): DataFrame =
@@ -205,34 +212,44 @@ private[graft] object SessionMemo {
       var built: DataFrame = null
       var buildStarted = false
       var writeFailed = false
-      try {
+      var dest: String = null
+      def write(tmp: String): Unit = {
+        buildStarted = true
+        built = build
+        // the write EXECUTES the builder's plan: a failure here is
+        // (almost always) the plan's own, not the durable tier's —
+        // serving `built` in-memory would just re-execute the same
+        // failing plan in the consumer's action. Flag it so the catch
+        // below propagates instead. Trade-off, documented: a rare
+        // sink-side failure mid-write (disk fills DURING the job — an
+        // unwritable root fails earlier, before buildStarted) also
+        // propagates rather than rebuilding.
+        try built.write.parquet(tmp)
+        catch { case e: Throwable => writeFailed = true; throw e }
+        // the cache root is a local directory (DurableCache.trustedRoot)
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(tmp, SchemaSidecar), allNullable(built.schema).json)
+      }
+      def publishAndRead(): DataFrame = {
         val t0 = System.nanoTime()
-        val dest = graft.lake.DurableCache.publish(spark, sfDir, key) { tmp =>
-          buildStarted = true
-          built = build
-          // the write EXECUTES the builder's plan: a failure here is
-          // (almost always) the plan's own, not the durable tier's —
-          // serving `built` in-memory would just re-execute the same
-          // failing plan in the consumer's action. Flag it so the catch
-          // below propagates instead. Trade-off, documented: a rare
-          // sink-side failure mid-write (disk fills DURING the job — an
-          // unwritable root fails earlier, before buildStarted) also
-          // propagates rather than rebuilding.
-          try built.write.parquet(tmp)
-          catch { case e: Throwable => writeFailed = true; throw e }
-          // the cache root is a local directory (DurableCache.trustedRoot)
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(tmp, SchemaSidecar), allNullable(built.schema).json)
-        }
+        dest = graft.lake.DurableCache.publish(spark, sfDir, key)(write)
         if (buildStarted) System.err.println(f"[memo] published durable " +
           f"$key in ${(System.nanoTime() - t0) / 1e9}%.2f s")
         else System.err.println(s"[memo] durable hit for $key")
-        // every entry under the current code fingerprint has its sidecar; a
-        // missing one is a corrupt entry and takes the fallback below
-        val schema = org.apache.spark.sql.types.DataType.fromJson(
-          java.nio.file.Files.readString(java.nio.file.Paths.get(dest, SchemaSidecar)))
-        spark.read.schema(schema.asInstanceOf[org.apache.spark.sql.types.StructType])
-          .parquet(dest)
+        readBack(spark, dest)
+      }
+      try {
+        try publishAndRead()
+        catch {
+          // a hit that does not read back whole is a corrupt entry: without
+          // its _SUCCESS marker the publish treats it as an incomplete
+          // leftover, moves it aside and builds it afresh
+          case scala.util.control.NonFatal(e) if !buildStarted && dest != null =>
+            System.err.println(s"[memo] durable entry for $key is unreadable " +
+              s"(${e.getClass.getSimpleName}: ${e.getMessage}); republishing")
+            java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(dest, "_SUCCESS"))
+            publishAndRead()
+        }
       } catch {
         // NonFatal only: OOM/interrupt must propagate, not trigger a
         // silent full rebuild
@@ -253,6 +270,19 @@ private[graft] object SessionMemo {
           if (built != null) built else build
       }
     }
+
+  /** The published entry at `dest`, read back through its schema sidecar
+    * and materialized (persisted, then counted), so a missing sidecar or a
+    * truncated data file fails here rather than in a consumer's action.
+    */
+  private def readBack(spark: SparkSession, dest: String): DataFrame = {
+    val schema = org.apache.spark.sql.types.DataType.fromJson(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(dest, SchemaSidecar)))
+    val df = spark.read.schema(schema.asInstanceOf[org.apache.spark.sql.types.StructType])
+      .parquet(dest).persist(StorageLevel.MEMORY_AND_DISK)
+    try { df.count(); df }
+    catch { case e: Throwable => df.unpersist(blocking = false); throw e }
+  }
 
   private val SchemaSidecar = "_graft_schema.json"
 

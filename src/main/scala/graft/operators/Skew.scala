@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{GraftSession, Tables}
+import graft.core.Tables
 
 /** Manual skew mitigation for equality joins — the fallback when AQE's
   * runtime skew-join split isn't available (e.g. the skew is known ahead of
@@ -34,6 +34,9 @@ object Skew {
   /** Shared body of the two salting strategies: scatter the big side with
     * `saltExpr`, replicate the small side once per bucket, join on
     * (key, bucket). Bucket values must land in [0, salt) as longs.
+    * The join is hinted sort-merge: salting only pays off on a shuffle
+    * join, and broadcasting the replicated side would buy the `salt`-fold
+    * copy for nothing.
     */
   private def saltedJoinWith(big: DataFrame, small: DataFrame, key: String,
       saltExpr: Column, salt: Int): DataFrame = {
@@ -42,7 +45,8 @@ object Skew {
     val bigSalted = big.withColumn(saltCol, saltExpr.cast("long"))
     val smallReplicated = small.withColumn(saltCol,
       explode(sequence(lit(0L), lit(salt.toLong - 1))))
-    bigSalted.join(smallReplicated, Seq(key, saltCol), "inner").drop(saltCol)
+    bigSalted.join(smallReplicated.hint("merge"), Seq(key, saltCol), "inner")
+      .drop(saltCol)
   }
 
   /** Inner equi-join `big ⋈ small` on `key`, with the big side salted into
@@ -70,26 +74,16 @@ object Skew {
   /** The q80 fixture: every event enriched with its event-type's global
     * stats — a 5-distinct-value join key, the canonical low-cardinality
     * skew shape. The dim side (5 rows) would of course broadcast in
-    * production; the entry disables auto-broadcast on a derived session,
-    * built once per override set ([[GraftSession.derived]]; a new session
-    * per call would recompile all its generated code), to force the
-    * shuffle path and exercise the salted plan the way it runs when the
-    * dim side is join-table-sized. Oracle: the plain unsalted join
+    * production; the salted join's sort-merge hint forces the shuffle path
+    * on the caller's session and exercises the salted plan the way it runs
+    * when the dim side is join-table-sized. Oracle: the plain unsalted join
     * (salting is a pure partitioning change — bit-identical output, which
     * is also why the deterministic [[saltedJoinBy]] variant is the one
     * under the hash gate).
     */
   def eventTypeStatsSalted(spark: SparkSession, sfDir: String,
-      salts: Int = 16): DataFrame =
-    eventTypeStatsSaltedOn(GraftSession.derived(spark, SaltedJoinConfs), sfDir, salts)
-
-  /** The confs [[eventTypeStatsSalted]] runs under. */
-  private[graft] val SaltedJoinConfs = Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-
-  /** [[eventTypeStatsSalted]]'s query on a session carrying [[SaltedJoinConfs]]. */
-  private[graft] def eventTypeStatsSaltedOn(s: SparkSession, sfDir: String,
-      salts: Int): DataFrame = {
-    val events = Tables.events(s, sfDir)
+      salts: Int = 16): DataFrame = {
+    val events = Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
     val stats = events.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_type_events"),

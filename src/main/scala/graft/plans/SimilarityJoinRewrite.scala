@@ -216,7 +216,13 @@ object SimilarityJoinRewrite extends Rule[LogicalPlan] with PredicateHelper {
             }
             val elemAttr =
               AttributeReference(s"__graft_sim_elem_$tag", et, elemNullable)()
-            val gen = Generate(Explode(pfxAttr), unrequiredChildIndex = Nil,
+            // the generator input is tagged, not the bare attribute: for an
+            // attribute input Spark's InferFiltersFromGenerate infers
+            // `size(pfx) > 0 AND isnotnull(pfx)`, and pushdown inlines the
+            // prefix alias's whole input pipeline into that filter below
+            // any exchange under the join (on q75, its scan stage). The filter
+            // drops nothing the explode keeps; KnownNullable is a no-op tag
+            val gen = Generate(Explode(KnownNullable(pfxAttr)), unrequiredChildIndex = Nil,
               outer = false, qualifier = None,
               generatorOutput = Seq(elemAttr), child = projected)
             (gen, pfxAttr, elemAttr, nAlias.toAttribute)

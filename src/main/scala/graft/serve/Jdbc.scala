@@ -8,8 +8,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
   * K4: per-micro-batch append via foreachBatch, spark_stream.py:135-151;
   * K5: driver-side DDL bootstrap, spark_stream.py:93-133).
   *
-  * No database exists in the build environment, so these stay thin and
-  * untested-by-integration; the logic is all Spark-engine JDBC.
+  * Thin on purpose: the logic is all Spark-engine JDBC. JdbcSpec and
+  * perfbench's `stream_ingest` drive them end to end against embedded
+  * in-memory Derby (shipped with Spark's jars); the skip-gated
+  * PgSmokeSpec covers real Postgres when a server is reachable.
   *
   * Scale notes: `numPartitions` bounds concurrent connections (each write
   * partition opens one); batchsize amortizes round trips. The reference's

@@ -125,8 +125,9 @@ object Probe {
   }
 
   def plan(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
-    // a derived session, so the caller's conf keeps AQE as it was
-    val static = GraftSession.derived(spark, Map("spark.sql.adaptive.enabled" -> "false"))
+    // a one-off session of its own, so the caller's conf keeps AQE as it was
+    val static = spark.newSession()
+    static.conf.set("spark.sql.adaptive.enabled", "false")
     catalogue(names).foreach { case (name, fn) =>
       println(s"\n========== $name ==========")
       println(fn(static, sfDir).queryExecution.explainString(FormattedMode))

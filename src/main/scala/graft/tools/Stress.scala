@@ -196,8 +196,8 @@ object Stress extends ScanMeter {
         s"DPP should read ~$selectedRows fact rows (+<=2x$dimRows dim), read $read")
     }
     time("DPP-disabled control scan reads all 500 partitions") {
-      val off = GraftSession.derived(spark,
-        Map("spark.sql.optimizer.dynamicPartitionPruning.enabled" -> "false"))
+      val off = spark.newSession()
+      off.conf.set("spark.sql.optimizer.dynamicPartitionPruning.enabled", "false")
       val (days, read) = runAndMeter(Lake.dppScanOf(
         off.read.parquet(s"$tmp/fact"), off.read.parquet(s"$tmp/dim")))
       assert(days.size == 5, "content must not depend on DPP")

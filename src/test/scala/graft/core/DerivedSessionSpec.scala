@@ -1,64 +1,35 @@
 package graft.core
 
-import java.lang.ref.WeakReference
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import graft.{SparkEntry, SparkTestBase}
 import graft.operators.{Dedup, Skew}
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate
 
-/** [[GraftSession.derived]]: one child session per (parent, override map),
-  * conf-isolated from the parent, and reused across calls so the
-  * rule-planned queries on it stop recompiling their generated code.
+/** Every catalogue query runs on its caller's session and leaves its conf
+  * as found. The queries that once ran on a derived session (q75, q80) or
+  * changed the caller's conf around a job (q74) keep their rows, q75 plans
+  * as it did with its old conf, and the rule-planned and hinted queries
+  * compile no code on a warm call.
   */
 class DerivedSessionSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
-  private val key = "spark.graft.test.derivedSession"
-
-  /** The catalogue entries that run on a derived session, with its confs. */
-  private val derivedQueries = Seq(
-    "q75_sim_join_rewrite" -> Dedup.SimilarityJoinRewriteConfs,
-    "q80_salted_join" -> Skew.SaltedJoinConfs)
-
-  /** The rule-planned entries that run on the caller's session. */
-  private val callerQueries = Seq("q65_range_join_rewrite", "q261_hamming_join_rewrite")
 
   private def run(name: String): Unit =
     SparkEntry.queries(name)(spark, sf).write.format("noop").mode("overwrite").save()
 
-  test("the same override map returns the same session; another map another") {
-    val a = GraftSession.derived(spark, Map(key -> "1", "spark.graft.test.other" -> "x"))
-    assert(GraftSession.derived(spark,
-      Map("spark.graft.test.other" -> "x", key -> "1")) eq a)
-    val b = GraftSession.derived(spark, Map(key -> "2"))
-    assert(!(b eq a))
-    assert(!(a eq spark) && !(b eq spark))
-    assert(a.conf.get(key) === "1" && b.conf.get(key) === "2")
-    assert(spark.conf.getOption(key).isEmpty, "the parent's conf must stay unset")
+  test("q74, q75 and q80 leave the caller's spark.conf.getAll as found") {
+    val before = spark.conf.getAll
+    Seq("q74_decontam_bloom", "q75_sim_join_rewrite", "q80_salted_join").foreach(run)
+    assert(spark.conf.getAll === before)
   }
 
-  test("a derived child does not keep its parent alive") {
-    def orphanedParent(): (WeakReference[SparkSession], SparkSession) = {
-      val parent = spark.newSession()
-      (new WeakReference(parent), GraftSession.derived(parent, Map(key -> "1")))
-    }
-    val (parent, child) = orphanedParent()
-    var tries = 0
-    while (parent.get != null && tries < 20) { System.gc(); Thread.sleep(50); tries += 1 }
-    assert(parent.get == null, "the derived child (or the map) pins its parent")
-    assert(child.conf.get(key) === "1")
-  }
-
-  test("derived-session queries leave the parent's conf as it was") {
-    val before = derivedQueries.flatMap(_._2.keys).map(k => k -> spark.conf.getOption(k)).toMap
-    derivedQueries.foreach { case (name, _) => run(name) }
-    before.foreach { case (k, v) => assert(spark.conf.getOption(k) === v, k) }
-  }
-
-  test("a second warm call of each derived-session query compiles no code") {
-    (derivedQueries.map(_._1) ++ callerQueries).foreach { name =>
+  test("a second warm call of each rule-planned query compiles no code") {
+    Seq("q65_range_join_rewrite", "q75_sim_join_rewrite", "q80_salted_join",
+        "q261_hamming_join_rewrite").foreach { name =>
       run(name)
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       run(name)
@@ -67,48 +38,61 @@ class DerivedSessionSpec extends SparkTestBase {
     }
   }
 
-  // ---- old ≡ new: each query on a fresh newSession() with the verbatim
-  // confs of its pre-derived form, against the shipped derived form ----
+  test("q75 plans as with InferFiltersFromGenerate excluded") {
+    // the rule's generator input must not be a bare attribute: for one,
+    // InferFiltersFromGenerate adds a size/isnotnull filter that pushdown
+    // inlines, with the whole shingle pipeline, below the repartition
+    def optimized = Dedup.jaccardPairsRewrite(spark, sf).queryExecution.optimizedPlan
+    val default = optimized
+    val excluded = withRule(InferFiltersFromGenerate, on = false)(optimized)
+    assert(default.sameResult(excluded),
+      s"caller's session:\n$default\nInferFiltersFromGenerate excluded:\n$excluded")
+  }
 
-  private def freshWith(confs: (String, String)*): SparkSession = {
+  // ---- old ≡ new: each query on a newSession() carrying the verbatim
+  // confs of its old derived session, against the caller's session ----
+
+  private def oldSession(confs: (String, String)*): SparkSession = {
     val s = spark.newSession()
     confs.foreach { case (k, v) => s.conf.set(k, v) }
     s
   }
 
-  test("q75 on the derived session is bit-identical to the fresh-session form") {
-    val s = freshWith("spark.sql.optimizer.excludedRules" ->
+  test("q75 on the caller's session is bit-identical to its old derived form") {
+    val s = oldSession("spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-    assert(bits(Dedup.jaccardPairsRewriteOn(s, sf, 0.8, None))
-      == bits(Dedup.jaccardPairsRewrite(spark, sf)))
+    assert(bits(Dedup.jaccardPairsRewrite(s, sf)) == bits(Dedup.jaccardPairsRewrite(spark, sf)))
   }
 
-  test("q80 on the derived session is bit-identical to the fresh-session form") {
-    val s = freshWith("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    assert(bits(Skew.eventTypeStatsSaltedOn(s, sf, 16))
-      == bits(Skew.eventTypeStatsSalted(spark, sf)))
+  test("q80 on the caller's session is bit-identical to its old derived form") {
+    val s = oldSession("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+    assert(bits(Skew.eventTypeStatsSalted(s, sf)) == bits(Skew.eventTypeStatsSalted(spark, sf)))
   }
 
-  test("newSession() appears in main sources only in GraftSession and tools") {
-    val root = Paths.get("src/main/scala/graft")
+  /** (path relative to `dir`, content) of every Scala source under `dir`. */
+  private def sources(dir: String): Seq[(Path, String)] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the repository root: $root not found")
-    val allowed = Set(root.resolve("core/GraftSession.scala"))
-    val offenders = Files.walk(root).iterator.asScala
+    Files.walk(root).iterator.asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filterNot(allowed)
-      .filter(p => """\bnewSession\s*\(""".r.findFirstIn(Files.readString(p)).nonEmpty)
-      .map(root.relativize(_: Path).toString).toList
-    assert(offenders.isEmpty,
-      s"per-call newSession() in query code; use GraftSession.derived: $offenders")
+      .map(p => root.relativize(p: Path) -> Files.readString(p)).toList
+  }
+
+  test("query code never changes session state") {
+    // dev tools own their sessions and may build one-off control sessions
+    val stateChange = """\bnewSession\s*\(|\.conf\.(set|unset)\s*\(""".r
+    val offenders = sources("src/main/scala/graft")
+      .filterNot { case (p, _) => p.startsWith("tools") }
+      .filter { case (_, src) => stateChange.findFirstIn(src).nonEmpty }
+      .map(_._1.toString)
+    assert(offenders.isEmpty, "query code forks or changes a session; put the " +
+      s"choice in the plan (a rule, a join hint) instead: $offenders")
   }
 
   test("no spark.graft.* conf key appears in main sources") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root not found")
-    val offenders = Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => Files.readString(p).contains("spark.graft."))
-      .map(root.relativize(_: Path).toString).toList
+    val offenders = sources("src/main/scala")
+      .filter { case (_, src) => src.contains("spark.graft.") }
+      .map(_._1.toString)
     assert(offenders.isEmpty,
       s"the planner takes no spark.graft.* settings; the join rewrites fire on plan shape: $offenders")
   }

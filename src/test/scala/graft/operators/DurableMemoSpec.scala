@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{SparkTestBase, TempDirs}
 import graft.lake.DurableCache
+import org.scalatest.{Failed, Outcome, Succeeded}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,7 +21,11 @@ import scala.jdk.CollectionConverters._
   *    parquet inference, carries it);
   *  - the cache key covers the DATA fingerprint: touching a source file's
   *    mtime re-routes to a fresh cache entry (a rebuild), never a stale
-  *    read.
+  *    read;
+  *  - a published entry that does not read back whole (no sidecar, a
+  *    truncated data file) is rebuilt and republished, never an error.
+  * Each fixture's fresh `sfDir` keys its own fingerprint directory under
+  * the test root; the test that made it deletes it.
   * The root, key and GC are [[DurableCache]]'s, pinned here as well.
   */
 class DurableMemoSpec extends SparkTestBase with TempDirs {
@@ -41,6 +46,55 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
     try f finally sys.props.remove("graft.memo.durable")
   }
 
+  /** The fingerprint directories this test's durable calls publish under:
+    * each fixture's fresh `sfDir` keys its own, so the test deletes them
+    * when it ends.
+    */
+  private val published = scala.collection.mutable.Set.empty[java.nio.file.Path]
+
+  /** [[SessionMemo.durable]] over the fixture `fix`, its fingerprint
+    * directory recorded for deletion.
+    */
+  private def durable(fix: String, key: String)(build: => DataFrame): DataFrame = {
+    published += java.nio.file.Paths.get(DurableCache.root, DurableCache.fingerprint(spark, fix))
+    SessionMemo.durable(spark, fix, key)(build)
+  }
+
+  private def fingerprintDirs(): Set[String] =
+    Option(new java.io.File(DurableCache.root).list()).fold(Set.empty[String])(_.toSet)
+      .filter(_.matches("[0-9a-f]{32}"))
+
+  /** Each test deletes the fingerprint directories it published under and
+    * fails if it leaves a new one in the root.
+    */
+  override def withFixture(test: NoArgTest): Outcome = {
+    val before = fingerprintDirs()
+    val outcome =
+      try super.withFixture(test)
+      finally { published.foreach(deleteTree); published.clear() }
+    val left = fingerprintDirs() -- before
+    outcome match {
+      case Succeeded if left.nonEmpty =>
+        Failed(s"${DurableCache.root} gained fingerprint directories: $left")
+      case other => other
+    }
+  }
+
+  /** The published entry directory of `key`:
+    * `<root>/<fingerprint>/<key prefix>-<md5(key) prefix>`.
+    */
+  private def entryDir(key: String): java.nio.file.Path = {
+    val keyHash = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(DurableCache.root))
+    val dirs =
+      try walk.iterator().asScala.filter(p =>
+        java.nio.file.Files.isDirectory(p) && p.getFileName.toString.endsWith(s"-$keyHash")).toList
+      finally walk.close()
+    assert(dirs.size === 1, dirs)
+    dirs.head
+  }
+
   /** Fresh fixture dir with one tiny parquet "table". */
   private def mkFixture(): String = {
     val dir = tempDir("graft-durable-fix").toString
@@ -57,8 +111,8 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
     var builds = 0
     def build: DataFrame = { builds += 1; spark.range(3).toDF("n") }
     val key = s"durableOffSpec|$fix"
-    val a = SessionMemo.durable(spark, fix, key)(build)
-    val b = SessionMemo.durable(spark, fix, key)(build)
+    val a = durable(fix, key)(build)
+    val b = durable(fix, key)(build)
     assert(builds == 1 && sortedRows(a) == sortedRows(b))
     val memoRoot = new java.io.File(DurableCache.root)
     // no entry for THIS key may exist (other suites never enable the prop)
@@ -92,13 +146,13 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
             round(avg(col("v")), 6).as("av"))
       }
       val key = s"durableOnSpec|$fix"
-      val first = SessionMemo.durable(spark, fix, key)(build)
+      val first = durable(fix, key)(build)
       val firstRows = sortedRows(first)
       val firstSchema = first.schema
       assert(builds == 1)
       // simulate a fresh JVM: drop the in-memory tier, keep /tmp
       SessionMemo.invalidate(spark)
-      val second = SessionMemo.durable(spark, fix, key)(build)
+      val second = durable(fix, key)(build)
       assert(builds == 1, "second JVM must read the durable copy, not rebuild")
       assert(sortedRows(second) == firstRows)
       assert(second.schema.map(f => (f.name, f.dataType)) ==
@@ -120,10 +174,10 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
             array(col("v")).as("arr"))
       }
       val key = s"durableEmptySpec|$fix"
-      val first = SessionMemo.durable(spark, fix, key)(build)
+      val first = durable(fix, key)(build)
       assert(first.count() == 0)
       SessionMemo.invalidate(spark)
-      val second = SessionMemo.durable(spark, fix, key)(build)
+      val second = durable(fix, key)(build)
       assert(builds == 1 && second.count() == 0)
       assert(second.schema.map(f => (f.name, f.dataType)) == Seq(
         ("id", LongType), ("d", DecimalType(20, 2)),
@@ -142,7 +196,7 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
       var builds = 0
       def build: DataFrame = { builds += 1; spark.range(2).toDF("n") }
       val key = s"durableFpSpec|$fix"
-      SessionMemo.durable(spark, fix, key)(build)
+      durable(fix, key)(build)
       assert(builds == 1)
       SessionMemo.invalidate(spark)
       // nudge every file's mtime forward (content unchanged is irrelevant
@@ -153,7 +207,7 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
           java.nio.file.attribute.FileTime.fromMillis(
             java.nio.file.Files.getLastModifiedTime(p).toMillis + 5000))
       } finally walk.close()
-      SessionMemo.durable(spark, fix, key)(build)
+      durable(fix, key)(build)
       assert(builds == 2, "changed data fingerprint must rebuild")
       SessionMemo.invalidate(spark)
     }
@@ -175,7 +229,7 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
       var builds = 0
       def build: DataFrame = { builds += 1; spark.range(2).toDF("n") }
       val key = s"durableNestedSpec|$fix"
-      SessionMemo.durable(spark, fix, key)(build)
+      durable(fix, key)(build)
       assert(builds == 1)
       SessionMemo.invalidate(spark)
       // rewrite the LEAF in place (same name set), then RESTORE every
@@ -187,7 +241,7 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
           java.nio.file.Files.getLastModifiedTime(leaf).toMillis + 7000))
       dirTimes.foreach { case (p, t) =>
         java.nio.file.Files.setLastModifiedTime(p, t) }
-      SessionMemo.durable(spark, fix, key)(build)
+      durable(fix, key)(build)
       assert(builds == 2,
         "a nested leaf rewrite must re-key the durable cache, never serve stale")
       SessionMemo.invalidate(spark)
@@ -295,21 +349,35 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
       var builds = 0
       def build: DataFrame = { builds += 1; spark.range(4).toDF("n") }
       val key = s"durableNoSidecarSpec|$fix"
-      val first = sortedRows(SessionMemo.durable(spark, fix, key)(build))
+      val first = sortedRows(durable(fix, key)(build))
       SessionMemo.invalidate(spark)
-      // the entry is `<root>/<fingerprint>/<key prefix>-<md5(key) prefix>`
-      val keyHash = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(DurableCache.root))
-      val sidecars =
-        try walk.iterator().asScala.filter(p =>
-          p.getParent.getFileName.toString.endsWith(s"-$keyHash") &&
-            p.getFileName.toString == "_graft_schema.json").toList
-        finally walk.close()
-      assert(sidecars.size === 1, sidecars)
-      java.nio.file.Files.delete(sidecars.head)
-      assert(sortedRows(SessionMemo.durable(spark, fix, key)(build)) === first)
+      java.nio.file.Files.delete(entryDir(key).resolve("_graft_schema.json"))
+      assert(sortedRows(durable(fix, key)(build)) === first)
       assert(builds === 2, "a corrupt entry must fall back to a build")
+      SessionMemo.invalidate(spark)
+    }
+  }
+
+  test("an entry with a truncated data file is rebuilt and republished") {
+    withDurable {
+      val fix = mkFixture()
+      var builds = 0
+      def build: DataFrame = { builds += 1; spark.range(40).toDF("n") }
+      val key = s"durableTruncatedSpec|$fix"
+      val first = sortedRows(durable(fix, key)(build))
+      SessionMemo.invalidate(spark)
+      val listing = java.nio.file.Files.list(entryDir(key))
+      val part =
+        try listing.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+        finally listing.close()
+      val ch = java.nio.channels.FileChannel.open(part, java.nio.file.StandardOpenOption.WRITE)
+      try ch.truncate(ch.size() / 2) finally ch.close()
+      // the read-back fails inside durable(), which rebuilds and republishes
+      assert(sortedRows(durable(fix, key)(build)) === first)
+      assert(builds === 2, "a truncated entry must be rebuilt")
+      SessionMemo.invalidate(spark)
+      assert(sortedRows(durable(fix, key)(build)) === first)
+      assert(builds === 2, "the republished entry must read back without a build")
       SessionMemo.invalidate(spark)
     }
   }
@@ -328,7 +396,7 @@ class DurableMemoSpec extends SparkTestBase with TempDirs {
           .select(assert_true(col("id") < 2).as("a"), col("id"))
       }
       val key = s"durableExecFailSpec|$fix"
-      intercept[Exception] { SessionMemo.durable(spark, fix, key)(build) }
+      intercept[Exception] { durable(fix, key)(build) }
       assert(builds == 1, "the failing builder must run exactly once")
       SessionMemo.invalidate(spark)
     }

@@ -1,9 +1,11 @@
 package graft.operators
 
 import graft.SparkTestBase
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.functions._
 
-class SaltedJoinBySpec extends SparkTestBase {
+class SaltedJoinBySpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private def fact = {
     val s = spark
@@ -42,8 +44,19 @@ class SaltedJoinBySpec extends SparkTestBase {
 
   test("q80 fixture matches its own unsalted form on the shared session") {
     val sf = "/root/testdata/sf0.001"
-    val salted = Skew.eventTypeStatsSalted(spark, sf)
-      .collect().map(_.toSeq).toSet
+    val q80 = Skew.eventTypeStatsSalted(spark, sf)
+    val salted = q80.collect().map(_.toSeq).toSet
+    // the salted join shuffles on the shared session: no broadcast join,
+    // and both sides keyed on the salt (the final adaptive plan)
+    val plan = q80.queryExecution.executedPlan
+    val joins = collect(plan) { case j: BaseJoinExec => j }
+    assert(joins.nonEmpty, s"no join in\n$plan")
+    assert(!joins.exists(_.isInstanceOf[BroadcastHashJoinExec]), s"a broadcast join in\n$plan")
+    joins.foreach { j =>
+      assert(j.leftKeys.exists(_.references.exists(_.name == "__graft_salt")) &&
+        j.rightKeys.exists(_.references.exists(_.name == "__graft_salt")),
+        s"join keys without the salt: $j")
+    }
     val e = graft.core.Tables.events(spark, sf)
       .select(col("event_id"), col("event_type"), col("value"))
     val stats = e.groupBy(col("event_type"))

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkTestBase
-import graft.core.GraftSession
 import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.storage.StorageLevel
 
@@ -94,12 +93,12 @@ class SessionMemoSpec extends SparkTestBase {
     assert(st === SessionMemo.Stats.zero.copy(hits = 1))
   }
 
-  test("a build on a GraftSession.derived child shows up in the JVM-wide snapshot") {
-    val child = GraftSession.derived(spark, Map("spark.sql.shuffle.partitions" -> "3"))
+  test("a build on a newSession() child shows up in the JVM-wide snapshot") {
+    val child = spark.newSession()
     SessionMemo.invalidate(child)
     val before = SessionMemo.snapshot()
-    SessionMemo(child, "memo-spec-derived")(child.range(3).toDF())
-    assert(since(before, "memo-spec-derived").builds === 1)
+    SessionMemo(child, "memo-spec-child")(child.range(3).toDF())
+    assert(since(before, "memo-spec-child").builds === 1)
     SessionMemo.invalidate(child)
   }
 
